@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A named bundle of driver-checkable queries.
@@ -39,4 +41,47 @@ trait QueryPack {
     * every timed run the serving shape the override documents.
     * Verify never calls this — the gate keeps timing nothing. */
   def benchWarm(spark: SparkSession, sfDir: String): Unit = ()
+
+  /** Build this pack's `artifact` for `dataDir` once per JVM and
+    * return that value on every later call (pair stores, fitted
+    * models, posting indexes, ANN layouts). Keyed by pack, artifact
+    * and data dir, so two packs never share an entry and Verify's
+    * sf0.01 and Bench's sf0.1 runs in one JVM never collide.
+    * Concurrent first calls run `build` once; the rest wait for it. A
+    * build may call `once` or [[storeRoot]] for another key. A build
+    * that throws memoizes nothing, so the next call retries. */
+  protected final def once[A](artifact: String, dataDir: String)(build: => A): A =
+    QueryPack.once((getClass.getName, artifact, dataDir))(build)
+
+  /** One temp catalog root per (store, data dir) per JVM, deleted at
+    * JVM exit. The bench invokes each query several times; a fresh
+    * temp dir per invocation would pile table copies up under /tmp,
+    * while re-putting into the same root keeps disk bounded
+    * (`writeVersioned` swaps in the new version and deletes the
+    * previous one). Each invocation closes its Catalog so the next
+    * one can take the writer lock. */
+  protected final def storeRoot(store: String, dataDir: String): String =
+    once(s"store-root:$store", dataDir) {
+      val p = Files.createTempDirectory(s"graft-$store")
+      sys.addShutdownHook(graft.catalog.Catalog.deleteRecursively(p))
+      p.toString
+    }
+}
+
+object QueryPack {
+  /** A build-once slot; its monitor serializes the first build. */
+  private final class Slot { var value: Option[Any] = None }
+
+  /** Slots only, never build results: `computeIfAbsent` runs no user
+    * code here, so a build that itself calls [[once]] for another key
+    * cannot hit the map's recursive-update check. */
+  private val slots = new ConcurrentHashMap[(String, String, String), Slot]()
+
+  private def once[A](key: (String, String, String))(build: => A): A = {
+    val slot = slots.computeIfAbsent(key, _ => new Slot)
+    slot.synchronized {
+      if (slot.value.isEmpty) slot.value = Some(build)
+      slot.value.get.asInstanceOf[A]
+    }
+  }
 }

@@ -10,8 +10,9 @@ import graft.operators.Similarity
   * a function of `probeFlips`, averaged over a set of seeded query
   * vectors. This turns the operators' "recall is governed by nprobe /
   * probe radius exactly as in published designs" claims into numbers
-  * the docs can cite — the same measure-don't-guess role TopKBench and
-  * SkewJoinBench play for the skew dispatch.
+  * the docs can cite — the same measure-don't-guess role the measured
+  * notes on Skew.saltedTopK and Skew.saltedJoin play for the skew
+  * dispatch.
   *
   * The two corpora bracket the structure axis (round-11 verdict #4):
   *
@@ -130,14 +131,7 @@ object RecallBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(math.min(32, Runtime.getRuntime.availableProcessors()))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val k = sys.env.get("SPARK_GRAFT_RECALL_K").flatMap(_.toIntOption)
       .getOrElse(10)

@@ -1,7 +1,6 @@
 package graft
 
 import scala.io.StdIn
-import org.apache.spark.sql.SparkSession
 import graft.operators.{HashPartition, RangePartition, Traffic}
 
 /** Interactive shell speaking the reference's command language
@@ -17,12 +16,7 @@ import graft.operators.{HashPartition, RangePartition, Traffic}
 object Repl {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft-catalog")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(4)
     val engine = new Engine(spark, root)
     println("Please Enter message for SDFS:")
     var line = StdIn.readLine()

@@ -102,13 +102,7 @@ object ScaleGen {
 
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleGen <srcSfDir> <destDir> <factor>")
-    val spark = SparkSession.builder()
-      .appName("graft-scalegen")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
+    val spark = LocalSession(32)
     try run(spark, args(0), args(1), args(2).toInt)
     finally spark.stop()
   }

@@ -43,16 +43,7 @@ object Slopes {
     require(sfs == sfs.sorted && sfs.distinct == sfs,
       s"slope dirs must be distinct ascending SFs, got $sfs")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus())
     spark.range(1L << 20).selectExpr("sum(id)").collect() // warmup
 
     def medianSec(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,

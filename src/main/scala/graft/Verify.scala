@@ -62,14 +62,7 @@ object Verify {
     val subset = if (args.length > 2)
       Some(args.drop(2).flatMap(_.split(",")).filter(_.nonEmpty).toSet)
     else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(LocalSession.cpus(fallback = 4))
     // unknown subset names fail FAST: a typo'd name used to yield an
     // empty, silently-green run (round-18 advice)
     subset.foreach { names =>

@@ -98,8 +98,9 @@ object MinHashSignature {
   final val P = 2147483647L
 
   /** Seeded (a, b) permutation coefficients — the single source of
-    * truth for both this expression and the SQL/HOF formulations in
-    * [[graft.operators.Dedup]]. a ∈ [1, P-1], b ∈ [0, P). */
+    * truth for both this expression and the interpreted HOF
+    * reference the dedup spec checks it against. a ∈ [1, P-1],
+    * b ∈ [0, P). */
   def permutations(k: Int, seed: Long): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(seed)
     Seq.fill(k)((1L + rnd.nextLong(P - 1), rnd.nextLong(P)))

@@ -29,86 +29,36 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
-  /** 31-bit Mersenne prime; minhash permutation arithmetic stays in
-    * the Long range (a,x < 2^31 ⇒ a*x+b < 2^63). Single source of
-    * truth lives with the native expression. */
-  private val P = graft.functions.MinHashSignature.P
-
-  /** Deterministic permutation parameters (a ∈ [1,P), b ∈ [0,P)). */
-  private[graft] def permutations(k: Int, seed: Long = 42L): Seq[(Long, Long)] =
-    graft.functions.MinHashSignature.permutations(k, seed)
-
   /** Distinct word-`w`-shingle hashes of `textCol`, reduced mod P, as
     * one array column — computed without exploding rows. Delegates to
     * the native codegen'd [[graft.functions.WordShingleHashes]]
     * (`graft_shingles`; register via [[graft.functions.GramHashes]],
     * done by [[signatures]] and the brute-force oracles). The
-    * interpreted HOF twin below exists for the bitwise-equality spec. */
+    * interpreted HOF reference it replaced lives in test scope
+    * (`DedupReference`), where DedupSpec pins native == HOF
+    * bit-for-bit. */
   def shingleHashes(textCol: String, w: Int = 3): Column =
     expr(s"graft_shingles($textCol, $w)")
-
-  /** The pre-native HOF formulation: one interpreted lambda dispatch
-    * per shingle. The token array is let-bound ([[graft.functions
-    * .Let]]) so `split` runs ONCE per row; inlining it in the lambda
-    * would re-split per shingle, O(words²) per row. Kept as the
-    * semantic reference (DedupSpec pins native == HOF bit-for-bit). */
-  private[graft] def shingleHashesHof(textCol: String, w: Int = 3): Column =
-    expr(graft.functions.Let.let1(TextAnalysis.tokensSql(textCol), "toks")(
-      s"""array_distinct(transform(
-         |  sequence(0, greatest(size(toks) - $w, 0)),
-         |  i -> pmod(xxhash64(concat_ws(' ', slice(toks, i + 1, $w))), ${P}L)))""".stripMargin))
 
   /** Distinct character-`n`-gram hashes of `textCol` (the n-gram
     * Jaccard similarity universe). Native codegen'd
     * [[graft.functions.CharGramHashes]] (`graft_chargrams`); the HOF
-    * twin below is the semantic reference. */
+    * reference is test-scope `DedupReference.charShingleHashesHof`. */
   def charShingleHashes(textCol: String, n: Int = 5): Column =
     expr(s"graft_chargrams($textCol, $n)")
-
-  /** The pre-native HOF formulation: ~one interpreted substring+hash
-    * lambda dispatch per character of text. Kept for the
-    * bitwise-equality spec. */
-  private[graft] def charShingleHashesHof(textCol: String, n: Int = 5): Column =
-    expr(
-      s"""array_distinct(transform(
-         |  sequence(1, greatest(length($textCol) - ${n - 1}, 1)),
-         |  i -> pmod(xxhash64(substring($textCol, i, $n)), ${P}L)))""".stripMargin)
 
   /** k-element MinHash signature from a shingle-hash array column:
     * mh_j = min over shingles of (a_j*x + b_j) mod P. Delegates to
     * the native codegen'd [[graft.functions.MinHashSignature]]
-    * (`graft_minhash`, registered by [[signatures]]); the interpreted
-    * HOF twin below exists for the bitwise-equality spec and A/B. */
+    * (`graft_minhash`, registered by [[signatures]]). Native shipped
+    * over both interpreted forms it was A/B'd against — k
+    * `array_min` passes, and a single-pass `aggregate` fold carrying
+    * all k minima — each an interpreted lambda dispatch per gram;
+    * those timings were not kept. The k-pass form survives as the
+    * test-scope reference (`DedupReference.minhashSignatureHof`). */
   def minhashSignature(hashesCol: String, k: Int = 64,
                        seed: Long = 42L): Column =
     expr(s"graft_minhash($hashesCol, $k, ${seed}L)")
-
-  /** The pre-native HOF formulation: k interpreted array_min passes.
-    * Kept as the semantic reference (MinhashBench A/B; DedupSpec pins
-    * native == HOF bit-for-bit). */
-  private[graft] def minhashSignatureHof(hashesCol: String, k: Int = 64,
-                                         seed: Long = 42L): Column = {
-    val perms = permutations(k, seed)
-      .map { case (a, b) => s"named_struct('a', ${a}L, 'b', ${b}L)" }
-      .mkString("array(", ", ", ")")
-    expr(
-      s"""transform($perms,
-         |  p -> array_min(transform($hashesCol, x -> pmod(p.a * x + p.b, ${P}L))))""".stripMargin)
-  }
-
-  /** Same signature computed in ONE traversal of the gram array (fold
-    * carrying all k running minima) — A/B alternative to the k-pass
-    * form; see MinhashBench. */
-  private[graft] def minhashSignatureSinglePass(hashesCol: String, k: Int,
-                                                seed: Long = 42L): Column = {
-    val perms = permutations(k, seed)
-      .map { case (a, b) => s"named_struct('a', ${a}L, 'b', ${b}L)" }
-      .mkString("array(", ", ", ")")
-    expr(
-      s"""aggregate($hashesCol,
-         |  array_repeat(${P}L, $k),
-         |  (acc, x) -> zip_with(acc, $perms, (m, p) -> least(m, pmod(p.a * x + p.b, ${P}L))))""".stripMargin)
-  }
 
   /** Spread a narrow input across the cluster before a compute-heavy
     * map stage — see [[Spread.ensureWidth]] (plan-stats check, no RDD
@@ -274,9 +224,9 @@ object Dedup {
     * with the signature pass native (graft_chargrams + graft_minhash)
     * the doubled k costs little, and r=4 bands give a sharper S-curve
     * — fewer fluke candidates into the verify join, the stage that
-    * dominates at corpus scale. NgramBench (interleaved A/B at sf0.1)
-    * measured k64/r4 ≥ k32/r2 end-to-end with identical pair output;
-    * the estimate pre-filter is worth 5-13× on its own there. */
+    * dominates at corpus scale. An interleaved A/B at sf0.1 measured
+    * k64/r4 ≥ k32/r2 end-to-end with identical pair output; the
+    * estimate pre-filter is worth 5-13× on its own there. */
   def ngramNearDups(docs: DataFrame, idCol: String, textCol: String,
                     threshold: Double = 0.8, n: Int = 5, k: Int = 64,
                     bands: Int = 16, seed: Long = 42L,
@@ -740,7 +690,7 @@ object Dedup {
   /** Positional char-`k`-gram hashes of `textCol` — one hash per
     * window START position (NO dedup, document order preserved),
     * sampled every `stride`-th position. Same short-text clamp as
-    * [[charShingleHashesHof]] (texts shorter than `k` yield ONE
+    * [[charShingleHashes]] (texts shorter than `k` yield ONE
     * truncated gram), but the FULL 64-bit xxhash64 — NOT reduced mod
     * P: the mod-P universe exists for minhash permutation arithmetic,
     * which span profiling never does, and at 31 bits the global
@@ -791,7 +741,9 @@ object Dedup {
     *  - `stride` is the 100 TB knob: cost divides by `stride` while
     *    any duplicated region of length ≥ k + stride − 1 still
     *    intersects a sampled window on BOTH sides (stride 1 = exact,
-    *    the gate setting).
+    *    the gate setting and the shipped default). Strides 1/2/4/8
+    *    were timed with their flagged-doc and dup-window counts at
+    *    sf0.1; those numbers were not kept.
     * Caches release after the first consuming action
     * ([[MetricListener.releaseAfterFirstAction]]). */
   /** Shared first half of the span family: the persisted per-doc gram
@@ -971,22 +923,9 @@ object Dedup {
     * the token's hash. Near-identical texts differ in few bits. */
   def simhashFromHashes(hashesCol: String): Column =
     // native one-pass fold (graft_simhash, registered by
-    // simhashNearDups); the HOF twin below is the semantic reference
+    // simhashNearDups); the semantic reference is the test-scope
+    // DedupReference.simhashFromHashesHof
     expr(s"graft_simhash($hashesCol)")
-
-  /** The pre-native HOF formulation: 64 interpreted passes over the
-    * hash array (one per bit). Kept for the bitwise-equality spec. */
-  private[graft] def simhashFromHashesHof(hashesCol: String): Column =
-    expr(
-      s"""aggregate(
-         |  sequence(0, 63),
-         |  0L,
-         |  (acc, i) -> acc + shiftleft(
-         |    CASE WHEN aggregate(
-         |           $hashesCol,
-         |           0L,
-         |           (s, h) -> s + CASE WHEN shiftright(h, i) % 2 != 0 THEN 1L ELSE -1L END
-         |         ) > 0 THEN 1L ELSE 0L END, i))""".stripMargin)
 
   /** Token-hash array for [[simhashFromHashes]]. Kept separate so the
     * tokenize+hash pass runs ONCE per row — inlining it under the

@@ -69,8 +69,8 @@ object Skew {
     * columns constant per key leave the whole key in one bucket —
     * correct, but no spread.
     *
-    * Measured (SkewJoinBench, local[32], 24M rows with 90% on one
-    * key, small side forced past broadcast): salted ~2.2 s vs ~5.9 s
+    * Measured (local[32], 24M rows with 90% on one key, small side
+    * forced past broadcast): salted ~2.2 s vs ~5.9 s
     * plain sort-merge — 2.6×. Lowering AQE's skew-join split
     * threshold to 8 MB did not move the plain join in that setup; the
     * explicit salt was the lever that did. None of this applies when
@@ -106,14 +106,14 @@ object Skew {
     * Spark ≥ 3.5 for SMALL k: the optimizer's WindowGroupLimit rule
     * rewrites `filter(rank <= k)` into a partial per-partition top-k
     * BEFORE the shuffle, so the hot group's reducer receives at most
-    * k·partitions rows from a single exchange. TopKBench (6M rows,
-    * 90% in one group) measures the plain window at ~0.55 s vs
-    * ~0.95 s for the explicit two-phase salted form — the salt's
+    * k·partitions rows from a single exchange. Measured at local[32]
+    * on 6M rows with 90% in one group, k=10: the plain window ~0.55 s
+    * vs ~0.95 s for the explicit two-phase salted form — the salt's
     * second shuffle is pure overhead there. But the rule only fires
     * for k ≤ `spark.sql.optimizer.windowGroupLimitThreshold`
     * (default 1000); above it the plain window really does funnel the
-    * whole hot group through one task, and the same bench measures
-    * salted ~1.7 s vs plain ~13.9 s at k=2000 — an 8× win.
+    * whole hot group through one task: on the same input at k=2000,
+    * salted ~1.7 s vs plain ~13.9 s — an 8× win.
     *
     * So this DISPATCHES: plain single window when the optimizer will
     * bound it (k ≤ threshold), explicit salted two-phase otherwise.
@@ -165,8 +165,8 @@ object Skew {
 
   /** The explicit two-phase salted form, regardless of the
     * WindowGroupLimit threshold — the arm [[saltedTopK]] dispatches to
-    * for large k, exposed separately so TopKBench and the equivalence
-    * spec can measure/exercise it under the default conf. */
+    * for large k, exposed separately so the equivalence spec can
+    * exercise it under the default conf. */
   private[graft] def saltedTopKForced(df: DataFrame, groupCols: Seq[String],
                                       orderCols: Seq[Column], k: Int,
                                       saltFactor: Int = 64,

@@ -14,22 +14,6 @@ import graft.catalog.Catalog
   */
 object CatalogPack extends QueryPack {
 
-  /** One reusable store root per (store, data dir) per JVM — the bench
-    * invokes each query several times, and a fresh temp dir per
-    * invocation would accumulate table copies under /tmp (round-10
-    * ADVICE; same pattern as SimilarityPack.storeRoot). Re-putting
-    * into the same root keeps disk bounded (writeVersioned swaps and
-    * deletes the prior version); each invocation closes its Catalog so
-    * the next one can take the writer lock. */
-  private val storeRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def storeRoot(store: String, dataDir: String): String =
-    storeRoots.computeIfAbsent(s"$store|$dataDir", _ => {
-      val p = Files.createTempDirectory(s"graft-$store")
-      sys.addShutdownHook(Catalog.deleteRecursively(p))
-      p.toString
-    })
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_catalog_roundtrip" -> ((s, d) => {
       // fresh root per run: the registered output must outlive this

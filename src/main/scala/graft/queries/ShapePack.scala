@@ -47,8 +47,8 @@ object ShapePack extends QueryPack {
     // ranking window: top-3 priciest lines per return flag, through
     // saltedTopK's dispatch. At k=3 that is the plain window — Spark's
     // WindowGroupLimit already bounds the 3-task hot-flag sort with a
-    // per-partition partial top-k (TopKBench measured the explicit
-    // salted form strictly slower in this regime); the salted
+    // per-partition partial top-k (the explicit salted form measured
+    // strictly slower in this regime, see Skew.saltedTopK); the salted
     // two-phase engages only above the group-limit threshold, where
     // the rule goes dark.
     "q_window_rank" -> ((s, d) =>

@@ -90,7 +90,7 @@ class DedupSpec extends AnyFunSuite {
     graft.functions.SimHash64.register(spark)
     val both = docs.select(Dedup.tokenHashes("text").as("th"))
       .select(Dedup.simhashFromHashes("th").as("native"),
-              Dedup.simhashFromHashesHof("th").as("hof"))
+              DedupReference.simhashFromHashesHof("th").as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach(r => assert(r.getLong(0) === r.getLong(1)))
@@ -107,7 +107,7 @@ class DedupSpec extends AnyFunSuite {
           org.apache.spark.sql.functions.col("h")) > 0)
       val both = h.select(
           Dedup.minhashSignature("h", k).as("native"),
-          Dedup.minhashSignatureHof("h", k).as("hof"))
+          DedupReference.minhashSignatureHof("h", k).as("hof"))
         .collect()
       assert(both.nonEmpty)
       both.foreach { r =>
@@ -235,9 +235,9 @@ class DedupSpec extends AnyFunSuite {
     for (df <- Seq(docs.select("text"), edges)) {
       val both = df.select(
           Dedup.charShingleHashes("text", 5).as("cn"),
-          Dedup.charShingleHashesHof("text", 5).as("ch"),
+          DedupReference.charShingleHashesHof("text", 5).as("ch"),
           Dedup.shingleHashes("text", 3).as("wn"),
-          Dedup.shingleHashesHof("text", 3).as("wh"))
+          DedupReference.shingleHashesHof("text", 3).as("wh"))
         .collect()
       assert(both.nonEmpty)
       both.foreach { r =>

@@ -8,12 +8,22 @@ class MultimodalSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
   test("binaryFile source reads raw blobs with length metadata") {
-    val df = Multimodal.readBinaryFiles(spark, "/root/reference/files/*.bin")
-    val rows = df.collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("length") === r.getAs[Array[Byte]]("content").length.toLong)
-    }
+    // the FIXTURES.md §3 shape: a few seeded random 1-2 MiB blobs
+    val dir = java.nio.file.Files.createTempDirectory("graft-blobs")
+    try {
+      val rnd = new scala.util.Random(42L)
+      for (i <- 1 to 4) {
+        val bytes = new Array[Byte]((1 << 20) + rnd.nextInt(1 << 20))
+        rnd.nextBytes(bytes)
+        java.nio.file.Files.write(dir.resolve(s"file-$i.bin"), bytes)
+      }
+      val df = Multimodal.readBinaryFiles(spark, s"$dir/*.bin")
+      val rows = df.collect()
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        assert(r.getAs[Long]("length") === r.getAs[Array[Byte]]("content").length.toLong)
+      }
+    } finally graft.catalog.Catalog.deleteRecursively(dir)
   }
 
   test("blob table schema: binary data + typed metadata struct") {

@@ -95,8 +95,8 @@ class SkewBucketSpec extends AnyFunSuite {
       df.queryExecution.optimizedPlan.toString
     // k ≤ threshold (default 1000): plain single window — the
     // optimizer's partial group-limit bounds the shuffle for free
-    // (TopKBench: plain ~0.55 s vs salted ~0.95 s on the hot-group
-    // input), so no salt column may appear in the plan AND the
+    // (measured plain ~0.55 s vs salted ~0.95 s on a hot-group input,
+    // see Skew.saltedTopK), so no salt column may appear in the plan AND the
     // WindowGroupLimit node the whole premise rests on must actually
     // be there (if a future change breaks the Filter-over-Window
     // pattern the rule needs, the plain arm silently loses its bound)
@@ -106,8 +106,8 @@ class SkewBucketSpec extends AnyFunSuite {
     assert(planOf(small).contains("WindowGroupLimit"),
       "the plain arm's shuffle bound (WindowGroupLimit) did not fire")
     // k > threshold: the rule is off, the plain window would funnel
-    // the whole hot group through one task (TopKBench: 13.9 s vs
-    // 1.7 s salted at k=2000) — the salted two-phase must engage
+    // the whole hot group through one task (measured 13.9 s vs 1.7 s
+    // salted at k=2000) — the salted two-phase must engage
     val big = Skew.saltedTopK(li, Seq("l_returnflag"), order, k = 1001)
     assert(planOf(big).contains("__salt"),
       "k above the threshold must use the salted two-phase")
