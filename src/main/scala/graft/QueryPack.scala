@@ -77,7 +77,10 @@ object QueryPack {
     * cannot hit the map's recursive-update check. */
   private val slots = new ConcurrentHashMap[(String, String, String), Slot]()
 
-  private def once[A](key: (String, String, String))(build: => A): A = {
+  /** The memo behind the packs' `once`; other engine code keys it
+    * with its own first component (e.g. [[Tables]]' inferred schemas
+    * under "graft.Tables") so it never meets a pack's class name. */
+  private[graft] def once[A](key: (String, String, String))(build: => A): A = {
     val slot = slots.computeIfAbsent(key, _ => new Slot)
     slot.synchronized {
       if (slot.value.isEmpty) slot.value = Some(build)

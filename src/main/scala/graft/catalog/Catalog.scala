@@ -5,16 +5,23 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, min, pmod, xxhash64}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** One catalog entry: where a named dataset lives and (simulated)
   * which hosts replicate it. On a real cluster the path would sit on
   * HDFS/object storage and `replicas` would be the FS's concern — the
   * reference manages replication by hand because its storage layer is
   * scp between VMs (SURVEY.md §1.1).
+  *
+  * `schema` is the schema the entry's files read back with, recorded
+  * when the catalog wrote them itself (flat parquet puts only), so
+  * [[Catalog.get]] plans without Spark's footer-inference job. None
+  * means the read infers it.
   */
 final case class CatalogEntry(name: String, path: String, format: String,
                               replicas: Seq[String],
-                              options: Map[String, String] = Map.empty)
+                              options: Map[String, String] = Map.empty,
+                              schema: Option[StructType] = None)
 
 /** The SDFS verb surface (SURVEY.md §2.1) as a dataset catalog:
   * put / get / delete / ls / store / filetable
@@ -41,10 +48,13 @@ final case class CatalogEntry(name: String, path: String, format: String,
   *
   * The manifest is persisted as TSV (name, format, path,
   * comma-joined hosts, retired-prior-path, URL-encoded options,
-  * per-partition file/byte stats) so a new session can re-open the
-  * catalog — including the reader options a text-format entry needs
-  * to come back losslessly, and the partition bookkeeping that keeps
-  * [[fileStats]]/[[compactPartitioned]] planning off the FS.
+  * per-partition file/byte stats, URL-encoded JSON read schema) so a
+  * new session can re-open the catalog — including the reader options
+  * a text-format entry needs to come back losslessly, the partition
+  * bookkeeping that keeps [[fileStats]]/[[compactPartitioned]]
+  * planning off the FS, and the recorded schema that keeps [[get]]
+  * from running an inference job. Rows from older layouts, with
+  * fewer columns, load with the missing fields empty.
   *
   * Sharing contract: ONE WRITER per root, any number of readers —
   * the immutable-swap analog of the reference's leader write gate
@@ -202,12 +212,17 @@ final class Catalog(spark: SparkSession, root: String,
     * options they don't understand. */
   def put(name: String, df: DataFrame, format: String = "parquet",
           options: Map[String, String] = Map.empty): CatalogEntry =
-    writeVersioned(name, format, options) { dir =>
+    writeVersioned(name, format, options, Catalog.flatReadSchema(df, format)) { dir =>
       df.write.format(format).options(options).mode(SaveMode.Overwrite).save(dir)
     }
 
+  /** Write a fresh version dir and swap the entry to it. `schema` is
+    * the new version's read schema when the writer knows it
+    * ([[Catalog.flatReadSchema]]); the entry is rebuilt from scratch,
+    * so a put never carries the displaced version's schema. */
   private def writeVersioned(name: String, format: String,
-                             options: Map[String, String] = Map.empty)(
+                             options: Map[String, String] = Map.empty,
+                             schema: Option[StructType] = None)(
       write: String => Unit): CatalogEntry = synchronized {
     require_valid(name)
     ensureWriterLock()
@@ -226,7 +241,7 @@ final class Catalog(spark: SparkSession, root: String,
     partStats.remove(name)
     val previous = entries.get(name)
     val e = CatalogEntry(name, target.toString, format, placeReplicas(name),
-      options)
+      options, schema)
     entries.put(name, e)
     // reclaim the version TWO puts back; retire the one just displaced
     // (external paths registered via putPath are never deleted — same
@@ -610,7 +625,7 @@ final class Catalog(spark: SparkSession, root: String,
       b, lit(st.get(2)), lit(st.get(3)), bits)
     val n = if (numFiles > 0) numFiles
             else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    writeVersioned(name, format, options) { dir =>
+    writeVersioned(name, format, options, Catalog.flatReadSchema(df, format)) { dir =>
       df.withColumn("__graft_z", z)
         .repartitionByRange(n, col("__graft_z"))
         .sortWithinPartitions("__graft_z")
@@ -637,7 +652,8 @@ final class Catalog(spark: SparkSession, root: String,
     org.slf4j.LoggerFactory.getLogger(getClass).info(
       s"putCompacted($name): plan estimate $est B × ratio $compressionRatio " +
         s"= $estOnDisk B on disk → $nFiles file(s) of target $targetFileBytes B")
-    val e = writeVersioned(name, format, options) { dir =>
+    val e = writeVersioned(name, format, options,
+        Catalog.flatReadSchema(df, format)) { dir =>
       df.repartition(nFiles).write.format(format).options(options)
         .mode(SaveMode.Overwrite).save(dir)
     }
@@ -708,7 +724,10 @@ final class Catalog(spark: SparkSession, root: String,
   /** `get sdfs local`: resolve and read a named dataset. Blob entries
     * come back through Spark's `binaryFile` source (path, length,
     * content, ...) so the DataFrame verbs — multiread above all — work
-    * unchanged over them; byte-exact retrieval is [[getBlob]]. */
+    * unchanged over them; byte-exact retrieval is [[getBlob]]. An
+    * entry with a recorded schema reads with it, so planning the read
+    * submits no job; the rest (text formats, partitioned layouts,
+    * putPath registrations, blobs) let the source infer as before. */
   def get(name: String): DataFrame = {
     // miss → reload the manifest once: another Catalog instance over
     // the SAME root (a second engine/session) may have put the name
@@ -718,7 +737,8 @@ final class Catalog(spark: SparkSession, root: String,
       .orElse { loadManifest(); entries.get(name) }
       .getOrElse(throw new NoSuchElementException(s"no such dataset: $name"))
     val fmt = if (e.format == "blob") "binaryFile" else e.format
-    spark.read.format(fmt).options(e.options).load(e.path)
+    val reader = spark.read.format(fmt).options(e.options)
+    e.schema.fold(reader)(reader.schema).load(e.path)
   }
 
   /** `delete sdfs`: drop data and entry. Data is deleted only when it
@@ -790,10 +810,11 @@ final class Catalog(spark: SparkSession, root: String,
     Catalog.deleteRecursively(p)
 
   /** Manifest row: name, format, path, replicas, retired-prior-path
-    * ('' when none). Written to a temp file then ATOMIC_MOVE'd into
-    * place: a concurrent [[loadManifest]] from another Catalog
-    * instance over the same root sees the old manifest or the new one,
-    * never a truncated half-write. */
+    * ('' when none), options, partition stats, read schema ('' when
+    * none). Written to a temp file then ATOMIC_MOVE'd into place: a
+    * concurrent [[loadManifest]] from another Catalog instance over
+    * the same root sees the old manifest or the new one, never a
+    * truncated half-write. */
   // options column: URL-encoded k=v pairs joined with ';' — encoding
   // because option VALUES can contain the manifest's own separators
   // (a csv delimiter of '\t', a nullValue of ';')
@@ -838,7 +859,8 @@ final class Catalog(spark: SparkSession, root: String,
     val lines = entries.values.toSeq.sortBy(_.name).map { e =>
       s"${e.name}\t${e.format}\t${e.path}\t${e.replicas.mkString(",")}" +
         s"\t${retired.getOrElse(e.name, "")}\t${encodeOptions(e.options)}" +
-        s"\t${partStats.get(e.name).map(encodeStats).getOrElse("")}"
+        s"\t${partStats.get(e.name).map(encodeStats).getOrElse("")}" +
+        s"\t${e.schema.map(encodeSchema).getOrElse("")}"
     }
     val tmp = Files.createTempFile(rootPath, "_catalog", ".tmp")
     Files.write(tmp, lines.asJava)
@@ -847,11 +869,20 @@ final class Catalog(spark: SparkSession, root: String,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
+  // schema column: the read schema's JSON, URL-encoded so it cannot
+  // contain a tab; one that does not parse loads as None (inference)
+  private def encodeSchema(s: StructType): String =
+    java.net.URLEncoder.encode(s.json, "UTF-8")
+
+  private def decodeSchema(s: String): Option[StructType] =
+    scala.util.Try(DataType.fromJson(java.net.URLDecoder.decode(s, "UTF-8")))
+      .toOption.collect { case st: StructType => st }
+
   /** Merge the on-disk manifest into this instance's map (newer
     * in-memory state for a name this instance wrote is simply
     * re-asserted by its own saveManifest; a name another instance
     * wrote appears). Shorter rows from older manifest layouts load
-    * with no retired version / no options. */
+    * with no retired version / no options / no recorded schema. */
   private def loadManifest(): Unit =
     if (Files.exists(manifest)) {
       Files.readAllLines(manifest).asScala.foreach { line =>
@@ -862,7 +893,8 @@ final class Catalog(spark: SparkSession, root: String,
           case Array(n, f, p, r, ret, rest @ _*) =>
             entries.put(n, CatalogEntry(n, p, f,
               r.split(",").toSeq.filter(_.nonEmpty),
-              rest.headOption.map(decodeOptions).getOrElse(Map.empty)))
+              rest.headOption.map(decodeOptions).getOrElse(Map.empty),
+              rest.lift(2).filter(_.nonEmpty).flatMap(decodeSchema)))
             if (ret.nonEmpty) retired.put(n, ret) else retired.remove(n)
             rest.lift(1).filter(_.nonEmpty) match {
               case Some(stats) => partStats.put(n, decodeStats(stats))
@@ -915,6 +947,32 @@ object Catalog {
     bucketed
       .repartition(width, col(partitionCol), col("__b"))
       .drop("__pv", "__nf", "__b")
+  }
+
+  /** The schema a flat `format` write of `df` reads back with, or
+    * None where the catalog lets the read infer. Parquet only: Spark
+    * stores the written schema in each file's footer and its file
+    * sources report it with every level made nullable, so
+    * [[nullable]] of the frame's schema is exactly what inference
+    * would return. Text formats are left to inference on purpose:
+    * their reader options (csv `header`/`inferSchema`) decide the
+    * types. */
+  private[catalog] def flatReadSchema(df: DataFrame,
+                                      format: String): Option[StructType] =
+    if (format.equalsIgnoreCase("parquet"))
+      Some(nullable(df.schema).asInstanceOf[StructType])
+    else None
+
+  /** `t` with every struct field, array element and map value made
+    * nullable (map keys recursed into), as Spark's file sources report
+    * a read schema; Spark's own `asNullable` is `private[spark]`. */
+  private[catalog] def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
   }
 
   /** [[Catalog.fileStats]] row: data-file count, data bytes, and

@@ -13,8 +13,8 @@ import graft.{LocalSession, SparkEntry}
   * action, `clearCache` between runs, and `SPARK_GRAFT_BENCH_RUNS`
   * (default 3) trials interleaved across the queries, so host drift
   * hits every query alike. It prints each trial, a median and min per
-  * query, and then each trial's stages: wall, executor run time,
-  * shuffle read/write and tasks.
+  * query, and then each trial's job and stage counts and its stages:
+  * wall, executor run time, shuffle read/write and tasks.
   *
   * `plan <sfDir> <outDir> [query...]` writes each query's formatted
   * physical plan to `<outDir>/<query>.txt` (the gated form) and, where
@@ -47,14 +47,19 @@ object Probe {
                                     runMs: Long, readBytes: Long,
                                     writeBytes: Long, tasks: Int)
 
-  /** Stages of every job run under a job group, keyed by that group. */
+  /** Jobs and stages of every job run under a job group, keyed by that
+    * group. */
   private final class StageCollector extends SparkListener {
     private val groupOfStage = mutable.Map.empty[Int, String]
+    val jobs = mutable.Map.empty[String, Int].withDefaultValue(0)
     val byGroup = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[StageRow]]
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .foreach(g => e.stageIds.foreach(groupOfStage(_) = g))
+        .foreach { g =>
+          jobs(g) += 1
+          e.stageIds.foreach(groupOfStage(_) = g)
+        }
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
@@ -107,7 +112,8 @@ object Probe {
     println("--- stages (slowest 25 per trial)")
     stages.synchronized {
       for ((group, rows) <- stages.byGroup) {
-        println(f"== $group: ${rows.size} stages, ${rows.map(_.wallMs).sum} ms summed stage wall")
+        println(f"== $group: ${stages.jobs(group)} jobs, ${rows.size} stages, " +
+          f"${rows.map(_.wallMs).sum} ms summed stage wall")
         rows.sortBy(-_.wallMs).take(25).foreach { r =>
           println(f"  stage ${r.id}%4d wall=${r.wallMs}%6d ms run=${r.runMs}%7d ms " +
             f"sRead=${r.readBytes / 1024}%8d KB sWrite=${r.writeBytes / 1024}%8d KB " +

@@ -679,4 +679,152 @@ class CatalogSpec extends AnyFunSuite {
       .toSet
     assert(back === Set((1L, Some("a;b"), "x\ty"), (2L, None, "plain")))
   }
+
+  // ---- recorded read schemas ---------------------------------------------
+
+  /** Every column shape a flat parquet put must record exactly as the
+    * file source infers it: the engine's own put types, the remaining
+    * atomic types, non-nullable columns and nested containers, and a
+    * field carrying metadata. */
+  private def schemaZoo() = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.MetadataBuilder
+    val meta = new MetadataBuilder().putString("comment", "carried")
+      .putLong("width", 7L).build()
+    spark.range(3).select(
+      col("id"), // bigint, non-nullable
+      col("id").cast("int").as("i"),
+      col("id").cast("smallint").as("s"),
+      col("id").cast("tinyint").as("t"),
+      (col("id") / 3).as("d"),
+      (col("id") / 3).cast("float").as("f"),
+      concat(lit("k"), col("id")).as("str"),
+      when(col("id") === 1, lit(null)).otherwise(col("id").cast("string")).as("maybe"),
+      (col("id").cast("decimal(12,3)") / 7).cast("decimal(12,3)").as("dec"),
+      date_add(lit(java.sql.Date.valueOf("2024-02-28")), col("id").cast("int")).as("day"),
+      timestamp_micros(col("id") * 1000003L + 1700000000000000L).as("ts"),
+      (timestamp_micros(col("id") * 1000003L + 1700000000000000L)
+        .cast("timestamp_ntz")).as("ts_ntz"),
+      col("id").cast("string").cast("binary").as("bin"),
+      (col("id") % 2 === 0).as("flag"),
+      array(lit(1), col("id").cast("int")).as("arr"), // containsNull = false
+      map(lit("k"), col("id")).as("m"),               // valueContainsNull = false
+      struct(lit(1).as("a"), struct(col("id").as("b")).as("inner")).as("nested"),
+      col("id").as("tagged", meta))
+  }
+
+  test("a flat parquet put records the schema the file source infers") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    val (cat, dir) = freshCatalog()
+    val zoo = schemaZoo()
+    // the fixture really holds the non-nullable shapes the helper must erase
+    assert(!zoo.schema("id").nullable)
+    assert(!zoo.schema("arr").dataType.asInstanceOf[ArrayType].containsNull)
+    assert(!zoo.schema("m").dataType.asInstanceOf[MapType].valueContainsNull)
+    assert(!zoo.schema("nested").dataType.asInstanceOf[StructType]("a").nullable)
+    assert(zoo.schema("tagged").metadata.getString("comment") === "carried")
+    val frames = Seq(
+      "zoo" -> zoo,
+      "empty" -> zoo.filter(col("id") < 0), // juice's output for an unmatched parameter
+      "kv" -> zoo.select(col("str").as("key"), col("maybe").as("value")))
+    frames.foreach { case (n, df) => cat.put(n, df) }
+    cat.putCompacted("zoo_c", zoo, targetFileBytes = 1L << 20)
+    cat.putZOrdered("zoo_z", zoo, "id", "i", numFiles = 2)
+    val reopened = new Catalog(spark, dir)
+    (frames :+ ("zoo_c" -> zoo) :+ ("zoo_z" -> zoo)).foreach { case (n, df) =>
+      val inferred = spark.read.parquet(cat.filetable(n).path).schema
+      assert(cat.filetable(n).schema === Some(inferred), n)
+      assert(cat.get(n).schema === inferred, n)
+      assert(reopened.filetable(n).schema === Some(inferred), s"$n reopened")
+      assert(reopened.get(n).schema === inferred, s"$n reopened")
+      val key = df.columns.head
+      assert(cat.get(n).orderBy(key).collect().toSeq === df.orderBy(key).collect().toSeq, n)
+    }
+    assert(cat.get("empty").count() === 0L)
+  }
+
+  test("get of a recorded parquet entry plans without a job; text and partitioned entries still infer") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    val (cat, _) = freshCatalog()
+    cat.put("flat", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    val (flat, flatJobs) = JobCount(spark)(cat.get("flat"))
+    assert(flatJobs === 0)
+    assert(flat.count() === 2L)
+    // control: the same files without the recorded schema do infer
+    assert(JobCount(spark)(spark.read.parquet(cat.filetable("flat").path))._2 >= 1)
+
+    // csv: the reader options decide the types, so nothing is recorded
+    // — without inferSchema every column reads back as a string
+    val nation = Seq((0, "ALGERIA", 0), (1, "ARGENTINA", 1))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+    cat.put("nation_csv", nation, format = "csv", options = Map("header" -> "true"))
+    assert(cat.filetable("nation_csv").schema.isEmpty)
+    val (csv, csvJobs) = JobCount(spark)(cat.get("nation_csv"))
+    assert(csvJobs >= 1)
+    assert(csv.schema("n_nationkey").dataType === StringType)
+    cat.put("nation_csv_typed", nation, format = "csv",
+      options = Map("header" -> "true", "inferSchema" -> "true"))
+    assert(cat.get("nation_csv_typed").schema("n_nationkey").dataType === IntegerType)
+
+    // partitioned: the partition column's type comes from directory
+    // names, so a string column of digits reads back as an int
+    cat.putPartitioned("parted", Seq((1L, "10"), (2L, "20")).toDF("id", "p"), "p")
+    assert(cat.filetable("parted").schema.isEmpty)
+    assert(cat.get("parted").schema("p").dataType === IntegerType)
+    cat.appendPartitioned("parted", Seq((3L, "30")).toDF("id", "p"), "p")
+    assert(cat.filetable("parted").schema.isEmpty)
+    cat.compactPartitioned("parted")
+    assert(cat.filetable("parted").schema.isEmpty)
+    assert(cat.get("parted").count() === 3L)
+
+    // external registrations and blobs are not the catalog's writes
+    cat.putPath("ext", cat.filetable("flat").path, "parquet")
+    assert(cat.filetable("ext").schema.isEmpty)
+    assert(cat.get("ext").count() === 2L)
+    cat.putBlob("blob", Array[Byte](1, 2, 3))
+    assert(cat.filetable("blob").schema.isEmpty)
+  }
+
+  test("a re-put reads back the new version's schema, never the previous one") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    val (cat, dir) = freshCatalog()
+    cat.put("x", Seq((1, "a")).toDF("id", "v"))
+    cat.put("x", Seq(2.5, 3.5).toDF("score"))
+    val want = StructType(Seq(StructField("score", DoubleType)))
+    assert(cat.get("x").schema === want)
+    assert(cat.get("x").as[Double].collect().sorted.toSeq === Seq(2.5, 3.5))
+    assert(new Catalog(spark, dir).get("x").schema === want)
+    // a text-format re-put drops the recorded schema with the version
+    cat.put("x", Seq((1, "a")).toDF("id", "v"), format = "json")
+    assert(cat.filetable("x").schema.isEmpty)
+    assert(cat.get("x").columns.toSet === Set("id", "v"))
+  }
+
+  test("manifests from before the schema column open and read by inference") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-catalog-legacy")
+    val data = dir.resolve("old-v1").toString
+    Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(data)
+    // a seven-column row (options and partition stats empty) and a
+    // four-column row, as earlier layouts wrote them
+    Files.write(dir.resolve("_catalog.tsv"), java.util.List.of(
+      s"old\tparquet\t$data\tnode01,node02\t\t\t",
+      s"older\tparquet\t$data\tnode03"))
+    val cat = new Catalog(spark, dir.toString)
+    Seq("old", "older").foreach { n =>
+      assert(cat.filetable(n).schema.isEmpty, n)
+      assert(cat.get(n).orderBy("id").as[(Int, String)].collect().toSeq ===
+        Seq((1, "a"), (2, "b")), n)
+    }
+    // the next write rewrites the manifest with eight columns; the
+    // legacy entries keep inferring and a fresh one records
+    cat.put("new", Seq(1).toDF("x"))
+    val reopened = new Catalog(spark, dir.toString)
+    assert(reopened.filetable("old").schema.isEmpty)
+    assert(reopened.get("old").count() === 2L)
+    assert(reopened.filetable("new").schema.nonEmpty)
+  }
 }
