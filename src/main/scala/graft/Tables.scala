@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -10,44 +10,58 @@ import org.apache.spark.sql.types.StructType
   *
   * [[load]] infers each table's schema once and reads with it after
   * that, so building a query over the tables submits no footer
-  * inference job. The memo ([[QueryPack.once]]) is keyed by the
-  * table's absolute path, its file count, total size and newest
-  * modification time (one file for a single-file table), and the
-  * values of the session confs that change what parquet
-  * inference returns ([[InferenceConfs]]). A file rewritten in place
-  * or a changed conf therefore infers afresh.
+  * inference job. [[inferredSchema]] is the engine's one file-version
+  * schema memo; `Traffic.readCsv` uses it too, for the CSV header job.
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    inferredSchema(spark, path)
+    inferredSchema(spark, "parquet", path)
       .fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
   }
 
-  /** The confs whose values change the schema parquet inference
-    * returns for the same file. */
-  private val InferenceConfs = Seq(
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.mergeSchema")
+  /** Per format, the confs whose values change the schema inference
+    * returns for the same file: parquet's type mappings, and the case
+    * sensitivity CSV's header de-duplication reads. The CSV list covers
+    * reads without `inferSchema` (every column a string); typed CSV
+    * inference would also read the time-parsing confs. */
+  private val InferenceConfs = Map(
+    "parquet" -> Seq(
+      "spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.parquet.binaryAsString",
+      "spark.sql.parquet.int96AsTimestamp",
+      "spark.sql.parquet.inferTimestampNTZ.enabled",
+      "spark.sql.parquet.mergeSchema"),
+    "csv" -> Seq("spark.sql.caseSensitive"))
 
-  /** Spark's inferred schema of `path`, memoized per file version and
-    * inference confs. A directory's version is that of the files under
-    * it. None when the path lists no file, so the plain read reports
-    * the error as before. */
-  private def inferredSchema(spark: SparkSession, path: String): Option[StructType] =
-    scala.util.Try {
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
-      s"${fs.makeQualified(p)}|${files.size}|${files.map(_.getLen).sum}|" +
-        files.map(_.getModificationTime).max
-    }.toOption.map { version =>
-      val confs = InferenceConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString("|")
-      QueryPack.once(("graft.Tables", confs, version))(spark.read.parquet(path).schema)
+  /** Spark's inferred schema of a `format` read of `path` with
+    * `options`, memoized ([[QueryPack.once]]) per format, reader
+    * options, the values of that format's [[InferenceConfs]], and file
+    * version: the path's qualified name, file count, total size and
+    * newest modification time, over the files under it (one file for a
+    * single-file path). A file rewritten in place, another option or a
+    * changed conf therefore infers afresh. The files are listed with
+    * `listStatus`, which leaves their permissions unloaded: loading them
+    * on a host without libhadoop forks an `ls` per file. None for a
+    * format not listed above, or a path that lists no file, so the
+    * plain read infers and reports any error as before. */
+  private[graft] def inferredSchema(spark: SparkSession, format: String, path: String,
+                                    options: Map[String, String] = Map.empty): Option[StructType] =
+    InferenceConfs.get(format).flatMap { keys =>
+      scala.util.Try {
+        val p = new Path(path)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def files(st: FileStatus): Seq[FileStatus] =
+          if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files) else Seq(st)
+        val all = fs.listStatus(p).toSeq.flatMap(files)
+        s"${fs.makeQualified(p)}|${all.size}|${all.map(_.getLen).sum}|" +
+          all.map(_.getModificationTime).max
+      }.toOption.map { version =>
+        val read = options.toSeq.sorted.mkString(",") + "|" +
+          keys.map(k => spark.conf.getOption(k).getOrElse("")).mkString("|")
+        QueryPack.once(("graft.Tables", s"$format|$read", version))(
+          spark.read.format(format).options(options).load(path).schema)
+      }
     }
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")

@@ -3,7 +3,7 @@ package graft.catalog
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, min, pmod, xxhash64}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -55,6 +55,14 @@ final case class CatalogEntry(name: String, path: String, format: String,
   * planning off the FS, and the recorded schema that keeps [[get]]
   * from running an inference job. Rows from older layouts, with
   * fewer columns, load with the missing fields empty.
+  *
+  * Every write passes Hadoop options that put its `file:` paths on
+  * [[NioLocalFileSystem]] ([[Catalog.writer]]). Without libhadoop,
+  * Hadoop's local file system forks a `chmod` process for each file,
+  * `.crc` file and directory a write creates; that class sets the same
+  * permissions in-process, so a catalog write starts no OS process.
+  * The options ride the write call only, never an entry's stored
+  * options, and reads keep the session's cached file system.
   *
   * Sharing contract: ONE WRITER per root, any number of readers —
   * the immutable-swap analog of the reference's leader write gate
@@ -213,7 +221,7 @@ final class Catalog(spark: SparkSession, root: String,
   def put(name: String, df: DataFrame, format: String = "parquet",
           options: Map[String, String] = Map.empty): CatalogEntry =
     writeVersioned(name, format, options, Catalog.flatReadSchema(df, format)) { dir =>
-      df.write.format(format).options(options).mode(SaveMode.Overwrite).save(dir)
+      Catalog.writer(df).format(format).options(options).mode(SaveMode.Overwrite).save(dir)
     }
 
   /** Write a fresh version dir and swap the entry to it. `schema` is
@@ -273,7 +281,7 @@ final class Catalog(spark: SparkSession, root: String,
       // trusting the caller to remember the layout
       val e = writeVersioned(name, format,
         options + (Catalog.PartitionColKey -> partitionCol)) { dir =>
-        df.write.format(format).options(options).partitionBy(partitionCol)
+        Catalog.writer(df).format(format).options(options).partitionBy(partitionCol)
           .mode(SaveMode.Overwrite).save(dir)
       }
       // seed the manifest's per-partition bookkeeping from the dirs
@@ -332,7 +340,7 @@ final class Catalog(spark: SparkSession, root: String,
           s"appendPartitioned($name): column '${f.name}' is ${f.dataType} " +
             s"in the store but ${dfTypes(f.name)} in the appended frame")
       }
-      df.write.format(e.format).options(e.options ++ options)
+      Catalog.writer(df).format(e.format).options(e.options ++ options)
         .partitionBy(partitionCol).mode(SaveMode.Append).save(e.path)
       // refresh the manifest's per-partition bookkeeping for ONLY the
       // partitions this append touched (their values come off the
@@ -517,7 +525,7 @@ final class Catalog(spark: SparkSession, root: String,
     val oldCount = if (frag.nonEmpty) df.count() else 0L
     val out = writeVersioned(name, e.format, e.options) { dir =>
       if (frag.nonEmpty)
-        compacted.write.format(e.format).options(e.options)
+        Catalog.writer(compacted).format(e.format).options(e.options)
           .partitionBy(partitionCol).mode(SaveMode.Overwrite).save(dir)
       val target = Paths.get(dir)
       Files.createDirectories(target)
@@ -626,11 +634,11 @@ final class Catalog(spark: SparkSession, root: String,
     val n = if (numFiles > 0) numFiles
             else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     writeVersioned(name, format, options, Catalog.flatReadSchema(df, format)) { dir =>
-      df.withColumn("__graft_z", z)
+      val sorted = df.withColumn("__graft_z", z)
         .repartitionByRange(n, col("__graft_z"))
         .sortWithinPartitions("__graft_z")
         .drop("__graft_z")
-        .write.format(format).options(options).mode(SaveMode.Overwrite).save(dir)
+      Catalog.writer(sorted).format(format).options(options).mode(SaveMode.Overwrite).save(dir)
     }
   }
 
@@ -654,7 +662,7 @@ final class Catalog(spark: SparkSession, root: String,
         s"= $estOnDisk B on disk → $nFiles file(s) of target $targetFileBytes B")
     val e = writeVersioned(name, format, options,
         Catalog.flatReadSchema(df, format)) { dir =>
-      df.repartition(nFiles).write.format(format).options(options)
+      Catalog.writer(df.repartition(nFiles)).format(format).options(options)
         .mode(SaveMode.Overwrite).save(dir)
     }
     writeEstimates.put(name, est)
@@ -777,14 +785,15 @@ final class Catalog(spark: SparkSession, root: String,
 
   /** `multiread`: m concurrent `get`+count of the same name — the
     * reference's consistency stress op (fileserver.py:1266-1281),
-    * trivially safe under immutable writes. Returns the m row counts.
+    * trivially safe under immutable writes. Returns the m row counts,
+    * each read as one Spark job ([[Catalog.rowCount]]).
     */
   def multiread(name: String, m: Int,
                 timeout: scala.concurrent.duration.Duration =
                   Catalog.DefaultOpTimeout): Seq[Long] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = (1 to m).map(_ => Future(get(name).count()))
+    val fs = (1 to m).map(_ => Future(Catalog.rowCount(get(name))))
     fs.map(f => Await.result(f, timeout))
   }
 
@@ -948,6 +957,22 @@ object Catalog {
       .repartition(width, col(partitionCol), col("__b"))
       .drop("__pv", "__nf", "__b")
   }
+
+  /** `df.count()` in one Spark job: a scan of no columns summed per
+    * partition. `count()` itself aggregates through a shuffle, which
+    * adaptive execution runs as a map-stage job plus a result job. */
+  private[catalog] def rowCount(df: DataFrame): Long = {
+    import df.sparkSession.implicits._
+    df.select().mapPartitions(rows => Iterator(rows.size.toLong)).collect().sum
+  }
+
+  /** `df.write` on [[NioLocalFileSystem]]: every catalog write goes
+    * through here, so the files and directories it creates get their
+    * permissions without a `chmod` process each. The options reach the
+    * job's Hadoop conf only; entries never store them, and reads keep
+    * the session's cached file system. */
+  private def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(NioLocalFileSystem.WriteOptions)
 
   /** The schema a flat `format` write of `df` reads back with, or
     * None where the catalog lets the read infer. Parquet only: Spark

@@ -17,8 +17,16 @@ import graft.functions.{Pct, Text}
   */
 object Traffic {
 
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+  /** The CSV with its header row as column names, all columns
+    * strings. The header is read once per file version
+    * ([[graft.Tables.inferredSchema]]), so reading the same file again
+    * plans without a job. */
+  def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val options = Map("header" -> "true")
+    val reader = spark.read.options(options)
+    graft.Tables.inferredSchema(spark, "csv", path, options)
+      .fold(reader)(reader.schema).csv(path)
+  }
 
   def analyze(df: DataFrame, interconne: String): DataFrame = {
     val counts = df

@@ -77,12 +77,14 @@ object ShapePack extends QueryPack {
 
     // exact interpolated percentiles (both engines use the same
     // continuous-quantile definition; approx_percentile would not
-    // cross-check)
+    // cross-check). One aggregate answers both quantiles from one
+    // per-group value buffer; two would each build and sort their own.
     "q_percentile" -> ((s, d) =>
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
-        .agg(round(expr("percentile(l_extendedprice, 0.5)"), 4).as("med"),
-             round(expr("percentile(l_extendedprice, 0.9)"), 4).as("p90"))),
+        .agg(expr("percentile(l_extendedprice, array(0.5, 0.9))").as("q"))
+        .select(col("l_returnflag"), round(col("q")(0), 4).as("med"),
+                round(col("q")(1), 4).as("p90"))),
 
     // ROLLUP with sentinel'd subtotal rows (no NULLs in compared cols)
     "q_rollup" -> ((s, d) =>

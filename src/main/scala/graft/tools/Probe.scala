@@ -2,19 +2,24 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
+import org.apache.spark.sql.types.DecimalType
 import scala.collection.mutable
 import graft.{LocalSession, SparkEntry}
 
 /** Per-query probes for optimization work, on the Bench session.
   *
   * `time <sfDir> <query> [query...]` times the named bench queries
-  * with the Bench method: `benchWarm` off the clock, a `.count()`
-  * action, `clearCache` between runs, and `SPARK_GRAFT_BENCH_RUNS`
-  * (default 3) trials interleaved across the queries, so host drift
-  * hits every query alike. It prints each trial, a median and min per
-  * query, and then each trial's job and stage counts and its stages:
-  * wall, executor run time, shuffle read/write and tasks.
+  * with the Bench method: `benchWarm` off the clock, an action that
+  * reads every output column ([[consumeAll]], as the benchmark's
+  * output digest does), `clearCache` between runs, and
+  * `SPARK_GRAFT_BENCH_RUNS` (default 3) trials interleaved across the
+  * queries, so host drift hits every query alike. It prints each
+  * trial, a median and min per query, and then each trial's job and
+  * stage counts and its stages: wall, executor run time, shuffle
+  * read/write and tasks.
   *
   * `plan <sfDir> <outDir> [query...]` writes each query's formatted
   * physical plan to `<outDir>/<query>.txt` (the gated form) and, where
@@ -95,7 +100,7 @@ object Probe {
       spark.sparkContext.setJobGroup(s"$name t$t", s"probe $name t$t",
         interruptOnCancel = false)
       val t0 = System.nanoTime()
-      val n = qs(name)(spark, sfDir).count()
+      val n = consumeAll(qs(name)(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.clearJobGroup()
       spark.catalog.clearCache()
@@ -121,6 +126,17 @@ object Probe {
         }
       }
     }
+  }
+
+  /** Row count of `df`, from an action that also sums a hash of every
+    * output column. A bare `count()` lets the optimizer prune each
+    * expression no aggregate reads, so it can time a fraction of the
+    * query. Columns are renamed by position first, since names may
+    * repeat or hold dots. */
+  private def consumeAll(df: DataFrame): Long = {
+    val cols = df.toDF(df.columns.indices.map(i => s"_c$i"): _*)
+    val hash = xxhash64(cols.columns.toSeq.map(col): _*)
+    cols.agg(count(lit(1)), sum(hash.cast(DecimalType(38, 0)))).head().getLong(0)
   }
 
   private def plan(sfDir: String, outDir: String, named: Seq[String]): Unit = {
