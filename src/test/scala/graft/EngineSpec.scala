@@ -6,7 +6,9 @@ import graft.operators.{HashPartition, Traffic}
 
 /** End-to-end: the reference's canonical workload through the Engine
   * facade — put → maple → juice → SELECT (MP4-RUN-Command.txt:1-15)
-  * — plus conglomerate and intermediate cleanup.
+  * — plus conglomerate and intermediate cleanup. The traffic input is
+  * the committed reconstruction of the reference's fixture
+  * ([[SparkSuite.trafficCsv]], FIXTURES.md §1).
   */
 class EngineSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -15,7 +17,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("canonical workload: put traffic.csv, maple(Radio), juice(count)") {
     val engine = freshEngine()
-    engine.put("traffic.csv", "/root/reference/data/traffic.csv", "csv")
+    engine.put("traffic.csv", SparkSuite.trafficCsv, "csv")
 
     engine.maple("bear", "traffic.csv", numTasks = 4)(
       Traffic.csvMaple(param = "Radio"))
@@ -77,7 +79,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("REPL command surface drives the same workload") {
     val engine = freshEngine()
-    Repl.handle(engine, "put /root/reference/data/traffic.csv traffic.csv")
+    Repl.handle(engine, s"put ${SparkSuite.trafficCsv} traffic.csv")
     Repl.handle(engine, "maple maple-exe 4 bear traffic.csv Radio")
     Repl.handle(engine, "juice juice-exe 4 bear final_juice.csv 0 hash")
     assert(engine.filetable.contains("final_juice.csv"))
@@ -91,7 +93,7 @@ class EngineSpec extends AnyFunSuite {
   test("REPL multiwrite verb lands the dataset under concurrent puts") {
     val engine = freshEngine()
     Repl.handle(engine,
-      "multiwrite /root/reference/data/traffic.csv traffic_mw.csv 3")
+      s"multiwrite ${SparkSuite.trafficCsv} traffic_mw.csv 3")
     assert(engine.filetable.contains("traffic_mw.csv"))
     assert(engine.get("traffic_mw.csv").count() > 0L)
   }

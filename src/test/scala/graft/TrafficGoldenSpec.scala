@@ -3,16 +3,18 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Traffic
 
-/** Golden test of the canonical traffic query against the reference's
-  * own fixture (read-only at /root/reference/data/traffic.csv, 120
-  * data rows). Expected values hand-computed from the file with the
-  * Hadoop-oracle semantics (global denominator, trim, empty→"empty").
+/** Golden test of the canonical traffic query against the committed
+  * reconstruction of the reference's own fixture
+  * ([[SparkSuite.trafficCsv]], 121 data rows; FIXTURES.md §1). Expected
+  * values were hand-computed from the original file with the
+  * Hadoop-oracle semantics (global denominator, trim, empty→"empty");
+  * the reconstruction holds exactly the documented counts they rest on.
   */
 class TrafficGoldenSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
   private def resultMap(param: String): Map[String, (Long, String)] =
-    Traffic.analyze(spark, "/root/reference/data/traffic.csv", param)
+    Traffic.analyze(spark, SparkSuite.trafficCsv, param)
       .collect()
       .map(r => r.getAs[String]("detection") ->
         (r.getAs[Long]("cnt"), r.getAs[String]("pct_str")))
