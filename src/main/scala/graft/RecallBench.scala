@@ -163,7 +163,7 @@ object RecallBench {
       // "cluster" internally, and a caller-side column of that name
       // is ambiguous.
       val km = Similarity.kMeans(emb, "vec_id", "embedding",
-        k = kmClusters, iters = 5, seed = 7L, keepCaches = true)
+        k = kmClusters, iters = 5, seed = 7L)
       val clustered = emb.join(
           km.assignments.withColumnRenamed("cluster", "km_cluster"), "vec_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -279,7 +279,7 @@ object RecallBench {
       val base = emb.filter(col("vec_id") % mod < keep)
       val appended = emb.filter(col("vec_id") % mod >= keep)
       val km = Similarity.kMeans(base, "vec_id", "embedding",
-        k = kmClusters, iters = 5, seed = 7L, keepCaches = true)
+        k = kmClusters, iters = 5, seed = 7L)
       // base rows keep their fit-time assignment; appended rows get
       // the map-side no-refit assignment — exactly the store
       // q_ann_ivf_append maintains

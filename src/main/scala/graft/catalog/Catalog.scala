@@ -734,8 +734,10 @@ final class Catalog(spark: SparkSession, root: String,
     * content, ...) so the DataFrame verbs — multiread above all — work
     * unchanged over them; byte-exact retrieval is [[getBlob]]. An
     * entry with a recorded schema reads with it, so planning the read
-    * submits no job; the rest (text formats, partitioned layouts,
-    * putPath registrations, blobs) let the source infer as before. */
+    * submits no job; a csv entry reads with its header inferred once
+    * per file version ([[graft.Tables.inferredSchema]]); the rest
+    * (json, partitioned layouts, putPath registrations, blobs) let the
+    * source infer as before. */
   def get(name: String): DataFrame = {
     // miss → reload the manifest once: another Catalog instance over
     // the SAME root (a second engine/session) may have put the name
@@ -746,7 +748,9 @@ final class Catalog(spark: SparkSession, root: String,
       .getOrElse(throw new NoSuchElementException(s"no such dataset: $name"))
     val fmt = if (e.format == "blob") "binaryFile" else e.format
     val reader = spark.read.format(fmt).options(e.options)
-    e.schema.fold(reader)(reader.schema).load(e.path)
+    val schema = e.schema.orElse(
+      if (fmt == "csv") graft.Tables.inferredSchema(spark, fmt, e.path, e.options) else None)
+    schema.fold(reader)(reader.schema).load(e.path)
   }
 
   /** `delete sdfs`: drop data and entry. Data is deleted only when it

@@ -110,16 +110,13 @@ object Dedup {
     * build — at corpus scale neither side is broadcastable); the
     * partition count is pinned at defaultParallelism because the
     * self-join amplifies band rows into pairs, which AQE byte-based
-    * coalescing would under-parallelize. Returns the pair frame plus
-    * the internal cache for the CALLER's release hook (the band table
-    * materializes eagerly — a leaked cache would outlive the query). */
-  def candidateIdPairs(bandTbl: DataFrame, maxBucket: Int = 64)
-      : (DataFrame, Seq[DataFrame]) = {
-    val bandG = bandTbl.repartition(
+    * coalescing would under-parallelize. The band table is filled in
+    * the caller's `caches` scope. */
+  private def candidateIdPairs(caches: Caches.Scope, bandTbl: DataFrame,
+                               maxBucket: Int): DataFrame = {
+    val bandG = caches.fill(bandTbl.repartition(
         bandTbl.sparkSession.sparkContext.defaultParallelism,
-        col("band"), col("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    bandG.count()
+        col("band"), col("sig")))
     val sizes = bandG.groupBy("band", "sig").count()
     val pruned = bandG.hint("merge")
       .join(sizes.filter(col("count") <= maxBucket), Seq("band", "sig"))
@@ -131,7 +128,7 @@ object Dedup {
               col("l.id") < col("r.id"))
       .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    (pairs, Seq(bandG))
+    pairs
   }
 
   /** Exact Jaccard on candidates: join the (small) pair list back to
@@ -177,47 +174,23 @@ object Dedup {
     * frame is persisted for the duration of the job — it is read by
     * the band explode, both self-join sides, and the verify join, and
     * recomputing 64 minhash passes per consumer would dominate the
-    * runtime. The cache releases automatically after the first
-    * consuming action ([[MetricListener.releaseAfterFirstAction]]);
-    * persist the RESULT for multi-pass use — or pass
-    * `keepCaches = true` (a known multi-pass caller: several actions
-    * over the pair frame, each reusing the signature cache instead of
-    * re-running the minhash pass; release is then the caller's
-    * `clearCache()`). */
+    * runtime. Its caches follow the [[Caches]] lifecycle. */
   def lshNearDups(docs: DataFrame, idCol: String, shingler: Column,
                   threshold: Double, k: Int, bands: Int,
-                  seed: Long = 42L, maxBucket: Int = 64,
-                  keepCaches: Boolean = false): DataFrame = {
+                  seed: Long = 42L, maxBucket: Int = 64): DataFrame = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
-    val sigs = signatures(docs, idCol, shingler, k, seed)
-      .persist(StorageLevel.MEMORY_AND_DISK) // released by the hook below
-    // candidateIdPairs materializes its band cache EAGERLY (count); if
-    // it or the downstream construction throws, unpersist here instead
-    // of leaking the caches until session end — the release hook only
-    // registers on the result (r21 ADVICE).
-    val (pairs, bandCaches) =
-      try candidateIdPairs(bandRows(sigs, bands, k / bands), maxBucket)
-      catch { case e: Throwable => sigs.unpersist(false); throw e }
-    // isnotnull guard: size(mh) < 0 alone is never-true only because
-    // signatures() pre-filters empty/null hash arrays — under legacy
-    // (non-ANSI) sizeOfNull semantics a null mh would score -1 and
-    // PASS, injecting fabricated zero rows. Null-safe, not coupled.
-    try MetricListener.releaseAfterFirstAction(
-      verifyJaccard(pairs, sigs, threshold), sigs,
-      isnotnull(col("mh")) && size(col("mh")) < 0, sigs +: bandCaches,
-      keepCaches)
-    catch { case e: Throwable =>
-      (sigs +: bandCaches).foreach(_.unpersist(false)); throw e
+    Caches.scoped { caches =>
+      val sigs = caches.persist(signatures(docs, idCol, shingler, k, seed))
+      val pairs = candidateIdPairs(caches, bandRows(sigs, bands, k / bands), maxBucket)
+      verifyJaccard(pairs, sigs, threshold)
     }
   }
 
   /** Word-shingle MinHash-LSH near-dups (the classic document dedup). */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.8, w: Int = 3, k: Int = 64,
-                      bands: Int = 16, seed: Long = 42L,
-                      keepCaches: Boolean = false): DataFrame =
-    lshNearDups(docs, idCol, shingleHashes(textCol, w), threshold, k, bands,
-      seed, keepCaches = keepCaches)
+                      bands: Int = 16, seed: Long = 42L): DataFrame =
+    lshNearDups(docs, idCol, shingleHashes(textCol, w), threshold, k, bands, seed)
 
   /** Character-n-gram Jaccard near-dups, LSH-accelerated: same banded
     * pipeline over the char-gram universe. k=64 in 16 bands of 4:
@@ -229,10 +202,8 @@ object Dedup {
     * estimate pre-filter is worth 5-13× on its own there. */
   def ngramNearDups(docs: DataFrame, idCol: String, textCol: String,
                     threshold: Double = 0.8, n: Int = 5, k: Int = 64,
-                    bands: Int = 16, seed: Long = 42L,
-                    keepCaches: Boolean = false): DataFrame =
-    lshNearDups(docs, idCol, charShingleHashes(textCol, n), threshold, k, bands,
-      seed, keepCaches = keepCaches)
+                    bands: Int = 16, seed: Long = 42L): DataFrame =
+    lshNearDups(docs, idCol, charShingleHashes(textCol, n), threshold, k, bands, seed)
 
   /** Incremental near-dup: candidates between NEW docs and an
     * EXISTING corpus — the shape a 100 TB pipeline actually runs.
@@ -249,50 +220,33 @@ object Dedup {
   def incrementalNearDups(newDocs: DataFrame, corpusSigs: DataFrame,
                           idCol: String, shingler: Column,
                           threshold: Double, k: Int, bands: Int,
-                          seed: Long = 42L, maxBucket: Int = 64,
-                          cacheCorpus: Boolean = true,
-                          keepCaches: Boolean = false): DataFrame = {
+                          seed: Long = 42L, maxBucket: Int = 64): DataFrame = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val r = k / bands
-    val newSigs = signatures(newDocs, idCol, shingler, k, seed)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // The corpus signature frame is consumed four times (band table ×2,
-    // estimate join, verify join); a COMPUTED-but-uncached frame would
-    // re-run its whole signature pass per consumer, so by default an
-    // uncached frame is persisted here — and MATERIALIZED (count)
-    // before the fan-out, so the consumers below can't race to fill
-    // the same cache partitions inside one stage and re-run the
-    // upstream anyway (the lazy-persist hazard Components documents).
-    // The cache is left pinned for the CALLER to unpersist: a
-    // per-batch incremental driver reuses it across batches, so this
-    // function cannot know when it dies. Callers whose corpus is a
-    // STORED signature table (the production shape — parquet rescans
-    // are cheap and the corpus may dwarf executor storage) should pass
-    // `cacheCorpus = false` to keep per-batch memory proportional to
-    // the batch. Already-persisted frames are always left alone.
-    val corpus =
-      if (cacheCorpus && corpusSigs.storageLevel == StorageLevel.NONE) {
-        val c = corpusSigs.persist(StorageLevel.MEMORY_AND_DISK)
-        c.count()
-        c
-      } else corpusSigs
-    val corpusBand = bandRows(corpus, bands, r)
-    val sizes = corpusBand.groupBy("band", "sig").count()
-    val prunedCorpus = corpusBand
-      .join(sizes.filter(col("count") <= maxBucket), Seq("band", "sig"))
-      .drop("count")
-    val pairs = bandRows(newSigs, bands, r).alias("l")
-      .join(prunedCorpus.alias("r"),
-        col("l.band") === col("r.band") && col("l.sig") === col("r.sig"))
-      .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    // the BATCH-side cache dies with the first consuming action (the
-    // corpus cache above stays caller-owned — see its comment);
-    // keepCaches=true pins it too for a multi-action batch consumer
-    MetricListener.releaseAfterFirstAction(
-      verifyJaccardAB(pairs, newSigs, corpus, threshold),
-      newSigs, isnotnull(col("mh")) && size(col("mh")) < 0, Seq(newSigs),
-      keepCaches)
+    Caches.scoped { caches =>
+      val newSigs = caches.persist(signatures(newDocs, idCol, shingler, k, seed))
+      // The corpus signature frame is consumed four times (band table ×2,
+      // estimate join, verify join); a COMPUTED-but-uncached frame would
+      // re-run its whole signature pass per consumer, so it is filled
+      // here before the fan-out, so the consumers below can't race to
+      // fill the same cache partitions inside one stage and re-run the
+      // upstream anyway (the lazy-persist hazard Components documents).
+      // It is released with the batch cache. A per-batch driver that
+      // reuses one corpus across batches persists it itself; a frame
+      // already persisted is left alone.
+      val corpus = caches.fill(corpusSigs)
+      val corpusBand = bandRows(corpus, bands, r)
+      val sizes = corpusBand.groupBy("band", "sig").count()
+      val prunedCorpus = corpusBand
+        .join(sizes.filter(col("count") <= maxBucket), Seq("band", "sig"))
+        .drop("count")
+      val pairs = bandRows(newSigs, bands, r).alias("l")
+        .join(prunedCorpus.alias("r"),
+          col("l.band") === col("r.band") && col("l.sig") === col("r.sig"))
+        .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
+        .dropDuplicates("doc_a", "doc_b")
+      verifyJaccardAB(pairs, newSigs, corpus, threshold)
+    }
   }
 
   /** Apply near-dup `pairs` (doc_a < doc_b) as a dedup filter: drop
@@ -380,148 +334,146 @@ object Dedup {
     * tail the same way. */
   def exactJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         threshold: Double, n: Int = 3,
-                        maxGramFreq: Int = 0,
-                        keepCaches: Boolean = false): DataFrame = {
+                        maxGramFreq: Int = 0): DataFrame = {
     require(threshold > 0, "exactJaccardPairs needs threshold > 0 " +
       "(candidate generation by shared gram is only exact above 0)")
-    // spread BEFORE shingling (the signatures() discipline): a small
-    // parquet file arrives as ONE scan partition, which would serialize
-    // the gram build AND everything narrow downstream of the persisted
-    // frame — the explode, the candidate-join probe and its partial
-    // aggregation all inherit the cache's single partition (measured at
-    // sf0.1: a 1.8 s single-task stage on a 32-core host)
-    val grams = spread(docs).select(col(idCol).as("id"),
-        TextAnalysis.stringShingles(textCol, n).as("g"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ex = grams.select(col("id"), explode(col("g")).as("gram"))
-    // the capped branch persists its bound-filtered pair frame too;
-    // collected here so the release hook below drops it with `grams`
-    var cappedCaches: Seq[DataFrame] = Seq.empty
-    val result =
-      if (maxGramFreq > 0) {
-        // capped: candidates come from the capped grams but jaccard is
-        // defined over the FULL gram sets. Shape: ONE capped-gram
-        // self-join counts per-pair CAPPED intersections (the
-        // gramIntersections one-pass discipline — a naive
-        // candidates-then-recount plan re-exploded every candidate's
-        // full gram set and cost 15× the uncapped scan at sf1), then
-        // a SOUND upper bound closes almost every pair without a
-        // second pass: a shared gram is capped or hot, so
-        // inter ≤ inter_c + min(h_a, h_b) with h = the doc's hot-gram
-        // count, and union ≥ na + nb − that bound — pairs whose bound
-        // can't reach the threshold are pruned (never a qualifying
-        // pair), pairs sharing NO hot gram have inter == inter_c and
-        // emit their EXACT jaccard directly, and only hot-involved
-        // survivors (the boilerplate cluster the cap exists for) pay
-        // the full-set recount.
-        //
-        // Plan shape (r21): every gram-keyed consumer — the doc-freq
-        // aggregate, the capped filter join, the hot-per-doc counts
-        // and both sides of the candidate self-join — reads ONE
-        // materialized, gram-partitioned copy of the exploded relation
-        // (`exG`). Hanging them off a shared Exchange and trusting
-        // ReusedExchange does NOT work here: the exchange's child scans
-        // an InMemoryRelation whose cached plan is an AdaptiveSparkPlan,
-        // which defeats subtree canonicalization, so every consumer
-        // re-computed AND re-shuffled the explode (measured at sf0.1:
-        // 4 identical 5 MB map stages, ~6 s of task time each).
-        // Persisting the repartitioned frame keeps its hash
-        // partitioning visible to the planner (InMemoryRelation
-        // preserves child output partitioning), so the gram-keyed
-        // aggregates and the self-join plan with NO further exchange.
-        // The partition count is pinned at defaultParallelism rather
-        // than left to AQE: the self-join AMPLIFIES — a few MB of gram
-        // rows explode into millions of pair rows — and AQE's
-        // byte-based coalescing would fold the probe stage onto a
-        // handful of cores. The count materializes grams and exG in
-        // one pass (no cache-fill races across AQE's concurrent jobs).
-        val exG = ex.repartition(
-            docs.sparkSession.sparkContext.defaultParallelism, col("gram"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        exG.count()
-        val freqAll = exG.groupBy("gram").agg(count(lit(1)).as("df"))
-        val hotGrams = freqAll.filter(col("df") > maxGramFreq).select("gram")
-        val keyed = exG.join(
-          freqAll.filter(col("df") <= maxGramFreq).select("gram"), Seq("gram"))
-        val hotPerDoc = exG.join(hotGrams, Seq("gram"))
-          .groupBy("id").agg(count(lit(1)).as("h"))
-        val docStats = grams.select(col("id"), size(col("g")).as("nn"))
-          .join(hotPerDoc, Seq("id"), "left")
-          .select(col("id"), col("nn"), coalesce(col("h"), lit(0L)).as("h"))
-        // the bound-filtered pair frame feeds THREE consumers (the
-        // no-hot emit, the recount's pair list, and the recount's
-        // doc-id prune) — persist and MATERIALIZE it so the whole
-        // candidate pipeline above runs once, not once per branch
-        // (released by the caller-facing hook below)
-        // MERGE hint: both sides are the same gram-partitioned cached
-        // frame, so sort-merge joins them with NO exchange and no
-        // broadcast build — the planner's size estimate would instead
-        // broadcast one whole side (a ~12 MB HashedRelation built and
-        // deserialized per task at sf0.1, and at corpus scale the side
-        // is the corpus: never broadcastable)
-        val interB = keyed.alias("l").hint("merge")
-          .join(keyed.alias("r"),
-            col("l.gram") === col("r.gram") && col("l.id") < col("r.id"))
-          .groupBy(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
-          .agg(count(lit(1)).as("inter_c"))
-          .join(docStats.select(col("id").as("doc_a"),
-            col("nn").as("na"), col("h").as("ha")), Seq("doc_a"))
-          .join(docStats.select(col("id").as("doc_b"),
-            col("nn").as("nb"), col("h").as("hb")), Seq("doc_b"))
-          .withColumn("hmin", least(col("ha"), col("hb")))
-          .filter((col("inter_c") + col("hmin")).cast("double")
-            / greatest(lit(1L),
-                col("na") + col("nb") - col("inter_c") - col("hmin"))
-            >= threshold)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        interB.count()
-        val noHot = interB.filter(col("hmin") === 0L)
-          .withColumn("jaccard",
-            expr("cast(inter_c as double) / (na + nb - inter_c)"))
-          .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        // recount input pruned to the docs of hot-involved survivors
-        // BEFORE anything shuffles: the survivors are the boilerplate
-        // cluster the cap exists for — small relative to the corpus by
-        // construction — so their doc-id set broadcasts, the semi-join
-        // prunes the exploded relation map-side, and when no pair
-        // involves a hot gram (the common case on clean corpora) the
-        // recount's joins move zero rows instead of shuffling the full
-        // gram relation twice (measured ~25 s of task time at sf0.1
-        // for joins whose left side was empty).
-        val svDocs = interB.filter(col("hmin") > 0L)
-          .select(explode(array(col("doc_a"), col("doc_b"))).as("id"))
-          .distinct()
-        val exSv = exG.join(broadcast(svDocs), Seq("id"), "left_semi")
-        val verified = interB.filter(col("hmin") > 0L)
-          .select(col("doc_a"), col("doc_b"))
-          .join(exSv.select(col("id").as("doc_a"), col("gram")), Seq("doc_a"))
-          .join(exSv.select(col("id").as("doc_b"), col("gram")),
-            Seq("doc_b", "gram"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("inter"))
-          .join(grams.select(col("id").as("doc_a"), size(col("g")).as("na")),
-            Seq("doc_a"))
-          .join(grams.select(col("id").as("doc_b"), size(col("g")).as("nb")),
-            Seq("doc_b"))
-          .withColumn("jaccard",
+    Caches.scoped { caches =>
+      val grams = caches.persist(gramSets(docs, idCol, textCol, n))
+      val result =
+        if (maxGramFreq > 0) cappedJaccard(caches, grams, maxGramFreq, threshold)
+        else
+          // uncapped (the default and the gate path): the shared
+          // count-based machinery — see [[gramIntersections]]
+          gramIntersections(grams).withColumn("jaccard",
             expr("cast(inter as double) / (na + nb - inter)"))
-          .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        cappedCaches = Seq(exG, interB)
-        noHot.unionByName(verified)
-      } else {
-        // uncapped (the default and the gate path): the shared
-        // count-based machinery — see [[gramIntersections]]
-        val (inter, exCaches) = gramIntersections(grams)
-        cappedCaches = exCaches
-        inter.withColumn("jaccard",
-          expr("cast(inter as double) / (na + nb - inter)"))
-      }
-    val thresholded = result
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
-    MetricListener.releaseAfterFirstAction(thresholded, grams,
-      isnotnull(col("g")) && size(col("g")) < 0,
-      grams +: cappedCaches, keepCaches)
+      result
+        .filter(col("jaccard") >= threshold)
+        .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
+    }
+  }
+
+  /** Per-doc distinct word-`n`-gram STRING arrays (id, g): the input of
+    * the exact gram-pair family. The docs are spread BEFORE shingling
+    * (the signatures() discipline): a small parquet file arrives as ONE
+    * scan partition, which would serialize the gram build AND
+    * everything narrow downstream of the persisted frame — the explode,
+    * the candidate-join probe and its partial aggregation all inherit
+    * the cache's single partition (measured at sf0.1: a 1.8 s
+    * single-task stage on a 32-core host). */
+  private def gramSets(docs: DataFrame, idCol: String, textCol: String,
+                       n: Int): DataFrame =
+    spread(docs).select(col(idCol).as("id"),
+      TextAnalysis.stringShingles(textCol, n).as("g"))
+
+  /** [[exactJaccardPairs]]' capped path: (doc_a, doc_b, jaccard) over
+    * the persisted gram sets, candidates from the grams shared by at
+    * most `maxGramFreq` docs, jaccard over the FULL gram sets. */
+  private def cappedJaccard(caches: Caches.Scope, grams: DataFrame,
+                            maxGramFreq: Int, threshold: Double): DataFrame = {
+    val ex = grams.select(col("id"), explode(col("g")).as("gram"))
+    // capped: candidates come from the capped grams but jaccard is
+    // defined over the FULL gram sets. Shape: ONE capped-gram
+    // self-join counts per-pair CAPPED intersections (the
+    // gramIntersections one-pass discipline — a naive
+    // candidates-then-recount plan re-exploded every candidate's
+    // full gram set and cost 15× the uncapped scan at sf1), then
+    // a SOUND upper bound closes almost every pair without a
+    // second pass: a shared gram is capped or hot, so
+    // inter ≤ inter_c + min(h_a, h_b) with h = the doc's hot-gram
+    // count, and union ≥ na + nb − that bound — pairs whose bound
+    // can't reach the threshold are pruned (never a qualifying
+    // pair), pairs sharing NO hot gram have inter == inter_c and
+    // emit their EXACT jaccard directly, and only hot-involved
+    // survivors (the boilerplate cluster the cap exists for) pay
+    // the full-set recount.
+    //
+    // Plan shape (r21): every gram-keyed consumer — the doc-freq
+    // aggregate, the capped filter join, the hot-per-doc counts
+    // and both sides of the candidate self-join — reads ONE
+    // materialized, gram-partitioned copy of the exploded relation
+    // (`exG`). Hanging them off a shared Exchange and trusting
+    // ReusedExchange does NOT work here: the exchange's child scans
+    // an InMemoryRelation whose cached plan is an AdaptiveSparkPlan,
+    // which defeats subtree canonicalization, so every consumer
+    // re-computed AND re-shuffled the explode (measured at sf0.1:
+    // 4 identical 5 MB map stages, ~6 s of task time each).
+    // Persisting the repartitioned frame keeps its hash
+    // partitioning visible to the planner (InMemoryRelation
+    // preserves child output partitioning), so the gram-keyed
+    // aggregates and the self-join plan with NO further exchange.
+    // The partition count is pinned at defaultParallelism rather
+    // than left to AQE: the self-join AMPLIFIES — a few MB of gram
+    // rows explode into millions of pair rows — and AQE's
+    // byte-based coalescing would fold the probe stage onto a
+    // handful of cores. The count materializes grams and exG in
+    // one pass (no cache-fill races across AQE's concurrent jobs).
+    val exG = caches.fill(ex.repartition(
+      grams.sparkSession.sparkContext.defaultParallelism, col("gram")))
+    val freqAll = exG.groupBy("gram").agg(count(lit(1)).as("df"))
+    val hotGrams = freqAll.filter(col("df") > maxGramFreq).select("gram")
+    val keyed = exG.join(
+      freqAll.filter(col("df") <= maxGramFreq).select("gram"), Seq("gram"))
+    val hotPerDoc = exG.join(hotGrams, Seq("gram"))
+      .groupBy("id").agg(count(lit(1)).as("h"))
+    val docStats = grams.select(col("id"), size(col("g")).as("nn"))
+      .join(hotPerDoc, Seq("id"), "left")
+      .select(col("id"), col("nn"), coalesce(col("h"), lit(0L)).as("h"))
+    // the bound-filtered pair frame feeds THREE consumers (the
+    // no-hot emit, the recount's pair list, and the recount's
+    // doc-id prune) — persist and MATERIALIZE it so the whole
+    // candidate pipeline above runs once, not once per branch
+    // MERGE hint: both sides are the same gram-partitioned cached
+    // frame, so sort-merge joins them with NO exchange and no
+    // broadcast build — the planner's size estimate would instead
+    // broadcast one whole side (a ~12 MB HashedRelation built and
+    // deserialized per task at sf0.1, and at corpus scale the side
+    // is the corpus: never broadcastable)
+    val interB = caches.fill(keyed.alias("l").hint("merge")
+      .join(keyed.alias("r"),
+        col("l.gram") === col("r.gram") && col("l.id") < col("r.id"))
+      .groupBy(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
+      .agg(count(lit(1)).as("inter_c"))
+      .join(docStats.select(col("id").as("doc_a"),
+        col("nn").as("na"), col("h").as("ha")), Seq("doc_a"))
+      .join(docStats.select(col("id").as("doc_b"),
+        col("nn").as("nb"), col("h").as("hb")), Seq("doc_b"))
+      .withColumn("hmin", least(col("ha"), col("hb")))
+      .filter((col("inter_c") + col("hmin")).cast("double")
+        / greatest(lit(1L),
+            col("na") + col("nb") - col("inter_c") - col("hmin"))
+        >= threshold))
+    val noHot = interB.filter(col("hmin") === 0L)
+      .withColumn("jaccard",
+        expr("cast(inter_c as double) / (na + nb - inter_c)"))
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    // recount input pruned to the docs of hot-involved survivors
+    // BEFORE anything shuffles: the survivors are the boilerplate
+    // cluster the cap exists for — small relative to the corpus by
+    // construction — so their doc-id set broadcasts, the semi-join
+    // prunes the exploded relation map-side, and when no pair
+    // involves a hot gram (the common case on clean corpora) the
+    // recount's joins move zero rows instead of shuffling the full
+    // gram relation twice (measured ~25 s of task time at sf0.1
+    // for joins whose left side was empty).
+    val svDocs = interB.filter(col("hmin") > 0L)
+      .select(explode(array(col("doc_a"), col("doc_b"))).as("id"))
+      .distinct()
+    val exSv = exG.join(broadcast(svDocs), Seq("id"), "left_semi")
+    val verified = interB.filter(col("hmin") > 0L)
+      .select(col("doc_a"), col("doc_b"))
+      .join(exSv.select(col("id").as("doc_a"), col("gram")), Seq("doc_a"))
+      .join(exSv.select(col("id").as("doc_b"), col("gram")),
+        Seq("doc_b", "gram"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("inter"))
+      .join(grams.select(col("id").as("doc_a"), size(col("g")).as("na")),
+        Seq("doc_a"))
+      .join(grams.select(col("id").as("doc_b"), size(col("g")).as("nb")),
+        Seq("doc_b"))
+      .withColumn("jaccard",
+        expr("cast(inter as double) / (na + nb - inter)"))
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    noHot.unionByName(verified)
   }
 
   /** The shared count-based gram-intersection machinery behind
@@ -535,10 +487,8 @@ object Dedup {
     * candidate pair (array_intersect per pair) measured 1.7× slower
     * at sf0.1 and is strictly worse at corpus scale, where the
     * arrays are the corpus. Input is the persisted (id, g) gram
-    * frame (caller owns its release); output:
-    * (doc_a, doc_b, inter, na, nb) with doc_a < doc_b, plus the
-    * internal gram-partitioned cache for the caller's release hook. */
-  private def gramIntersections(grams: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    * frame; output: (doc_a, doc_b, inter, na, nb) with doc_a < doc_b. */
+  private def gramIntersections(grams: DataFrame): DataFrame = {
     // Plan shape, MEASURED both ways this round (r21): the self-join's
     // build side is left to the planner, which BROADCASTS one side of
     // the exploded relation — at these gate corpora the whole gram
@@ -555,7 +505,7 @@ object Dedup {
     // shape (its relation is capped, the planner's broadcast estimate
     // is not trustworthy there, and at 100 TB neither side broadcasts).
     val ex = grams.select(col("id"), explode(col("g")).as("gram"))
-    val out = ex.alias("l")
+    ex.alias("l")
       .join(ex.alias("r"),
         col("l.gram") === col("r.gram") && col("l.id") < col("r.id"))
       .groupBy(col("l.id").as("doc_a"), col("r.id").as("doc_b"))
@@ -564,7 +514,6 @@ object Dedup {
         Seq("doc_a"))
       .join(grams.select(col("id").as("doc_b"), size(col("g")).as("nb")),
         Seq("doc_b"))
-    (out, Seq.empty)
   }
 
   /** Gram-OVERLAP pairs: (doc_a, doc_b, shared) for every pair of
@@ -581,19 +530,13 @@ object Dedup {
     * every candidate the gram join touches (Σ freq² rows), which is a
     * scan of the candidate space, not a thresholded graph. */
   def sharedGramPairs(docs: DataFrame, idCol: String, textCol: String,
-                      minShared: Int, n: Int = 3,
-                      keepCaches: Boolean = false): DataFrame = {
+                      minShared: Int, n: Int = 3): DataFrame = {
     require(minShared >= 2, "sharedGramPairs needs minShared >= 2")
-    // spread before shingling — see exactJaccardPairs
-    val grams = spread(docs).select(col(idCol).as("id"),
-        TextAnalysis.stringShingles(textCol, n).as("g"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (inter, exCaches) = gramIntersections(grams)
-    val out = inter
-      .filter(col("inter") >= minShared)
-      .select(col("doc_a"), col("doc_b"), col("inter").as("shared"))
-    MetricListener.releaseAfterFirstAction(out, grams,
-      isnotnull(col("g")) && size(col("g")) < 0, grams +: exCaches, keepCaches)
+    Caches.scoped { caches =>
+      gramIntersections(caches.persist(gramSets(docs, idCol, textCol, n)))
+        .filter(col("inter") >= minShared)
+        .select(col("doc_a"), col("doc_b"), col("inter").as("shared"))
+    }
   }
 
   /** Asymmetric CONTAINMENT pairs — the quote/subset detector exact
@@ -620,27 +563,22 @@ object Dedup {
     * threshold > 0 keeps candidate generation by shared gram
     * exact. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       threshold: Double, n: Int = 3,
-                       keepCaches: Boolean = false): DataFrame = {
+                       threshold: Double, n: Int = 3): DataFrame = {
     require(threshold > 0, "containmentPairs needs threshold > 0 " +
       "(candidate generation by shared gram is only exact above 0)")
-    // spread before shingling — see exactJaccardPairs
-    val grams = spread(docs).select(col(idCol).as("id"),
-        TextAnalysis.stringShingles(textCol, n).as("g"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (inter, exCaches) = gramIntersections(grams)
-    val dirs = inter.select(explode(array(
-        struct(col("doc_a").as("doc_inner"), col("doc_b").as("doc_outer"),
-          (col("inter").cast("double") / col("na")).as("containment")),
-        struct(col("doc_b").as("doc_inner"), col("doc_a").as("doc_outer"),
-          (col("inter").cast("double") / col("nb")).as("containment"))))
-        .as("d"))
-      .select(col("d.doc_inner"), col("d.doc_outer"), col("d.containment"))
-    val out = dirs.filter(col("containment") >= threshold)
-      .select(col("doc_inner"), col("doc_outer"),
-        round(col("containment"), 4).as("containment"))
-    MetricListener.releaseAfterFirstAction(out, grams,
-      isnotnull(col("g")) && size(col("g")) < 0, grams +: exCaches, keepCaches)
+    Caches.scoped { caches =>
+      val inter = gramIntersections(caches.persist(gramSets(docs, idCol, textCol, n)))
+      val dirs = inter.select(explode(array(
+          struct(col("doc_a").as("doc_inner"), col("doc_b").as("doc_outer"),
+            (col("inter").cast("double") / col("na")).as("containment")),
+          struct(col("doc_b").as("doc_inner"), col("doc_a").as("doc_outer"),
+            (col("inter").cast("double") / col("nb")).as("containment"))))
+          .as("d"))
+        .select(col("d.doc_inner"), col("d.doc_outer"), col("d.containment"))
+      dirs.filter(col("containment") >= threshold)
+        .select(col("doc_inner"), col("doc_outer"),
+          round(col("containment"), 4).as("containment"))
+    }
   }
 
   /** Brute-force exact Jaccard pairs over an arbitrary shingler
@@ -744,24 +682,22 @@ object Dedup {
     *    the gate setting and the shipped default). Strides 1/2/4/8
     *    were timed with their flagged-doc and dup-window counts at
     *    sf0.1; those numbers were not kept.
-    * Caches release after the first consuming action
-    * ([[MetricListener.releaseAfterFirstAction]]). */
+    * The per-doc gram arrays follow the [[Caches]] lifecycle. */
   /** Shared first half of the span family: the persisted per-doc gram
     * arrays, the position-indexed explode (`p` = 0-based sample
     * index), and the corpus-wide duplicated-gram set — each dup gram
     * carrying its `owner`, the MIN doc id containing it (the copy
     * [[spanStrip]] preserves; profile/runs ignore it). */
-  private def spanFrames(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int, stride: Int, minDocs: Int)
+  private def spanFrames(caches: Caches.Scope, docs: DataFrame, idCol: String,
+                         textCol: String, k: Int, stride: Int, minDocs: Int)
       : (DataFrame, DataFrame, DataFrame) = {
     require(k >= 1, s"span ops need k >= 1, got $k")
     require(stride >= 1, s"span ops need stride >= 1, got $stride")
     require(minDocs >= 2,
       s"span ops need minDocs >= 2 (1 would mark every span), got $minDocs")
-    val spans = spread(docs)
+    val spans = caches.persist(spread(docs)
       .select(col(idCol).as("id"),
-        positionalGramHashes(textCol, k, stride).as("h"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // released by the caller's hook
+        positionalGramHashes(textCol, k, stride).as("h")))
     val pos = spans.select(col("id"), posexplode(col("h")).as(Seq("p", "g")))
     val dup = pos.dropDuplicates("id", "g")
       .groupBy("g").agg(count(lit(1)).as("n_docs"), min(col("id")).as("owner"))
@@ -772,12 +708,11 @@ object Dedup {
 
   def spanProfile(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 20, stride: Int = 1, minDocs: Int = 2,
-                  flagFrac: Double = 0.5,
-                  keepCaches: Boolean = false): DataFrame = {
-    val (spans, pos, dup) = spanFrames(docs, idCol, textCol, k, stride, minDocs)
+                  flagFrac: Double = 0.5): DataFrame = Caches.scoped { caches =>
+    val (spans, pos, dup) = spanFrames(caches, docs, idCol, textCol, k, stride, minDocs)
     val dupCounts = pos.join(dup, "g")
       .groupBy("id").agg(count(lit(1)).as("n_dup"))
-    val result = spans.select(col("id"), size(col("h")).as("n_raw"))
+    spans.select(col("id"), size(col("h")).as("n_raw"))
       .join(dupCounts, Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("n_raw"), lit(0)).cast("long").as("n_spans"),
@@ -787,8 +722,6 @@ object Dedup {
           round(col("n_dup_spans") / col("n_spans"), 6))
           .otherwise(lit(0.0)))
       .withColumn("flagged", (col("dup_frac") >= flagFrac).cast("int"))
-    MetricListener.releaseAfterFirstAction(result, spans,
-      isnotnull(col("h")) && size(col("h")) < 0, Seq(spans), keepCaches)
   }
 
   /** Longest duplicated RUN per doc — the gaps-and-islands reading of
@@ -805,24 +738,22 @@ object Dedup {
     * DUPLICATED positions — per-doc-sized partitions, never a global
     * window. Docs with no duplicated window report (0, 0). */
   def spanRuns(docs: DataFrame, idCol: String, textCol: String,
-               k: Int = 20, stride: Int = 1, minDocs: Int = 2,
-               keepCaches: Boolean = false): DataFrame = {
+               k: Int = 20, stride: Int = 1,
+               minDocs: Int = 2): DataFrame = Caches.scoped { caches =>
     import org.apache.spark.sql.expressions.Window
-    val (spans, pos, dup) = spanFrames(docs, idCol, textCol, k, stride, minDocs)
+    val (spans, pos, dup) = spanFrames(caches, docs, idCol, textCol, k, stride, minDocs)
     val w = Window.partitionBy("id").orderBy("p")
     val runs = pos.join(dup, "g")
       .select(col("id"), col("p"))
       .withColumn("grp", col("p") - row_number().over(w))
       .groupBy("id", "grp").agg(count(lit(1)).as("run"))
       .groupBy("id").agg(max(col("run")).as("mx"))
-    val result = spans.select(col("id"))
+    spans.select(col("id"))
       .join(runs, Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("mx"), lit(0L)).as("max_run_spans"),
         coalesce((col("mx") - 1) * stride + k, lit(0L))
           .cast("long").as("max_run_chars"))
-    MetricListener.releaseAfterFirstAction(result, spans,
-      isnotnull(col("h")) && size(col("h")) < 0, Seq(spans), keepCaches)
   }
 
   /** The standing corpus's side of incremental span dedup: its
@@ -849,17 +780,15 @@ object Dedup {
   def spanProfileIncremental(batch: DataFrame, corpusGrams: DataFrame,
                              idCol: String, textCol: String,
                              k: Int = 20, stride: Int = 1,
-                             flagFrac: Double = 0.5,
-                             keepCaches: Boolean = false): DataFrame = {
+                             flagFrac: Double = 0.5): DataFrame = Caches.scoped { caches =>
     require(k >= 1 && stride >= 1, s"spanProfileIncremental needs k, stride >= 1")
-    val spans = spread(batch)
+    val spans = caches.persist(spread(batch)
       .select(col(idCol).as("id"),
-        positionalGramHashes(textCol, k, stride).as("h"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // released by the hook below
+        positionalGramHashes(textCol, k, stride).as("h")))
     val pos = spans.select(col("id"), explode(col("h")).as("g"))
     val dupCounts = pos.join(corpusGrams.select(col("g")).distinct(), "g")
       .groupBy("id").agg(count(lit(1)).as("n_dup"))
-    val result = spans.select(col("id"), size(col("h")).as("n_raw"))
+    spans.select(col("id"), size(col("h")).as("n_raw"))
       .join(dupCounts, Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("n_raw"), lit(0)).cast("long").as("n_spans"),
@@ -869,8 +798,6 @@ object Dedup {
           round(col("n_dup_spans") / col("n_spans"), 6))
           .otherwise(lit(0.0)))
       .withColumn("flagged", (col("dup_frac") >= flagFrac).cast("int"))
-    MetricListener.releaseAfterFirstAction(result, spans,
-      isnotnull(col("h")) && size(col("h")) < 0, Seq(spans), keepCaches)
   }
 
   /** DESTRUCTIVE span dedup — the remove-all-but-one-copy pass of Lee
@@ -892,9 +819,8 @@ object Dedup {
     * The rebuild is a per-row array expression — O(len · |starts|)
     * interpreted HOF work only for docs that actually lose text. */
   def spanStrip(docs: DataFrame, idCol: String, textCol: String,
-                k: Int = 20, minDocs: Int = 2,
-                keepCaches: Boolean = false): DataFrame = {
-    val (spans, pos, dup) = spanFrames(docs, idCol, textCol, k, 1, minDocs)
+                k: Int = 20, minDocs: Int = 2): DataFrame = Caches.scoped { caches =>
+    val (spans, pos, dup) = spanFrames(caches, docs, idCol, textCol, k, 1, minDocs)
     val dropStarts = pos.join(dup, "g")
       .filter(col("id") =!= col("owner"))
       .groupBy("id")
@@ -905,7 +831,7 @@ object Dedup {
          |    i -> CASE WHEN exists(starts, s -> s <= i AND i < s + $k)
          |              THEN NULL ELSE substring($textCol, i, 1) END),
          |  x -> x IS NOT NULL))""".stripMargin)
-    val result = docs.select(col(idCol).as("id"), col(textCol))
+    docs.select(col(idCol).as("id"), col(textCol))
       .join(dropStarts, Seq("id"), "left")
       .select(col("id").as(idCol),
         when(col("starts").isNull, col(textCol)).otherwise(rebuilt)
@@ -914,8 +840,6 @@ object Dedup {
       .withColumn("dropped_chars",
         (col("__orig_len") - length(col(textCol))).cast("long"))
       .drop("__orig_len")
-    MetricListener.releaseAfterFirstAction(result, spans,
-      isnotnull(col("h")) && size(col("h")) < 0, Seq(spans), keepCaches)
   }
 
   /** 64-bit SimHash from a precomputed token-hash array column: bit i
@@ -962,14 +886,13 @@ object Dedup {
     * never collide, silently losing pairs. (A wider radius needs more
     * chunks: maxHamming+1 bands guarantee a collision in general.) */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3, maxBucket: Int = 64,
-                      keepCaches: Boolean = false): DataFrame = {
+                      maxHamming: Int = 3, maxBucket: Int = 64): DataFrame = {
     graft.functions.SimHash64.register(docs.sparkSession)
     hammingNearDups(
       spread(docs)
         .select(col(idCol).as("id"), tokenHashes(textCol).as("th"))
         .select(col("id"), simhashFromHashes("th").as("fp")),
-      maxHamming, maxBucket, keepCaches)
+      maxHamming, maxBucket)
   }
 
   /** The 64-bit-fingerprint near-dup CORE — 16-bit chunk banding,
@@ -984,8 +907,7 @@ object Dedup {
     * qualifying candidate (pairs can additionally be LOST only to the
     * `maxBucket` cap, the documented hot-bucket guard). */
   def hammingNearDups(fps: DataFrame, maxHamming: Int = 3,
-                      maxBucket: Int = 64,
-                      keepCaches: Boolean = false): DataFrame = {
+                      maxBucket: Int = 64): DataFrame = Caches.scoped { caches =>
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming=$maxHamming: 4-chunk banding only guarantees candidates for hamming <= 3")
     // The fingerprint persist is deliberately LAZY (unlike the other
@@ -996,8 +918,7 @@ object Dedup {
     // fingerprint this core serves) regressing ~2× median AND min.
     // The concurrent-fill race only duplicates partition compute, it
     // never corrupts the cache.
-    val withFp = fps.select(col("id"), col("fp"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // released by the hook below
+    val withFp = caches.persist(fps.select(col("id"), col("fp")))
     val chunks = fpChunks(withFp)
     val sizes = chunks.groupBy("band", "sig").count()
     val pruned = chunks
@@ -1005,15 +926,13 @@ object Dedup {
       .drop("count")
     val lhs = pruned.alias("l")
     val rhs = pruned.alias("r")
-    val result = lhs
+    lhs
       .join(rhs, col("l.band") === col("r.band") && col("l.sig") === col("r.sig") &&
               col("l.id") < col("r.id"))
       .select(col("l.id").as("doc_a"), col("r.id").as("doc_b"),
               expr("bit_count(l.fp ^ r.fp)").as("hamming"))
       .dropDuplicates("doc_a", "doc_b")
       .filter(col("hamming") <= maxHamming)
-    MetricListener.releaseAfterFirstAction(result, withFp,
-      expr("bit_count(fp)") < 0, Seq(withFp), keepCaches)
   }
 
   /** The four 16-bit chunk rows of each 64-bit fingerprint — the
@@ -1040,18 +959,17 @@ object Dedup {
     * fingerprints are 8 bytes/image, so the standing store rescans
     * cheaply and per-batch memory stays proportional to the batch. */
   def hammingNearDupsAB(newFps: DataFrame, corpusFps: DataFrame,
-                        maxHamming: Int = 3, maxBucket: Int = 64,
-                        keepCaches: Boolean = false): DataFrame = {
+                        maxHamming: Int = 3,
+                        maxBucket: Int = 64): DataFrame = Caches.scoped { caches =>
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming=$maxHamming: 4-chunk banding only guarantees candidates for hamming <= 3")
-    val nf = newFps.select(col("id"), col("fp"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // released by the hook below
+    val nf = caches.persist(newFps.select(col("id"), col("fp")))
     val corpusChunks = fpChunks(corpusFps.select(col("id"), col("fp")))
     val sizes = corpusChunks.groupBy("band", "sig").count()
     val pruned = corpusChunks
       .join(sizes.filter(col("count") <= maxBucket), Seq("band", "sig"))
       .drop("count")
-    val result = fpChunks(nf).alias("l")
+    fpChunks(nf).alias("l")
       .join(pruned.alias("r"),
         col("l.band") === col("r.band") && col("l.sig") === col("r.sig") &&
           col("l.id") =!= col("r.id"))
@@ -1059,8 +977,6 @@ object Dedup {
         expr("bit_count(l.fp ^ r.fp)").as("hamming"))
       .dropDuplicates("doc_new", "doc_corpus")
       .filter(col("hamming") <= maxHamming)
-    MetricListener.releaseAfterFirstAction(result, nf,
-      expr("bit_count(fp)") < 0, Seq(nf), keepCaches)
   }
 
   /** EXACT edit-distance similarity self-join — the record-linkage /
@@ -1100,13 +1016,12 @@ object Dedup {
     * the shrinking segment length defeat the blocking — use the
     * shingle/minhash family for loose similarity. Null strings drop. */
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-                        maxDist: Int = 2): DataFrame = {
+                        maxDist: Int = 2): DataFrame = Caches.scoped { caches =>
     require(maxDist >= 1 && maxDist <= 8,
       s"editDistancePairs needs maxDist in [1, 8], got $maxDist")
-    val t = df.select(col(idCol).as("id"), col(strCol).cast("string").as("s"),
-        lit(0).as("side"))
-      .filter(col("s").isNotNull)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val t = caches.persist(df.select(col(idCol).as("id"),
+        col(strCol).cast("string").as("s"), lit(0).as("side"))
+      .filter(col("s").isNotNull))
     // canonical pair by id; equal-length pairs arrive in both
     // orientations, unequal-length in one — distinct unifies both
     // with the multi-segment duplicates
@@ -1116,12 +1031,10 @@ object Dedup {
         when(col("id_a") <= col("id_b"), col("sa")).otherwise(col("sb")).as("ca"),
         when(col("id_a") <= col("id_b"), col("sb")).otherwise(col("sa")).as("cb"))
       .distinct()
-    val out = cands
+    cands
       .select(col("pid_a").as("id_a"), col("pid_b").as("id_b"),
         expr(s"levenshtein(ca, cb, $maxDist)").as("dist"))
       .filter(col("dist") >= 0)
-    MetricListener.releaseAfterFirstAction(out, t,
-      isnotnull(col("s")) && length(col("s")) < 0, Seq(t))
   }
 
   /** Two-corpus (A×B) exact edit-distance join — the record-linkage
@@ -1136,15 +1049,14 @@ object Dedup {
     * brute-force-verifiable exactness. */
   def editDistanceJoinAB(a: DataFrame, idA: String, strA: String,
                          b: DataFrame, idB: String, strB: String,
-                         maxDist: Int = 2): DataFrame = {
+                         maxDist: Int = 2): DataFrame = Caches.scoped { caches =>
     require(maxDist >= 1 && maxDist <= 8,
       s"editDistanceJoinAB needs maxDist in [1, 8], got $maxDist")
-    val t = a.select(col(idA).as("id"), col(strA).cast("string").as("s"),
-        lit(0).as("side"))
+    val t = caches.persist(a.select(col(idA).as("id"),
+        col(strA).cast("string").as("s"), lit(0).as("side"))
       .unionByName(b.select(col(idB).as("id"),
         col(strB).cast("string").as("s"), lit(1).as("side")))
-      .filter(col("s").isNotNull)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("s").isNotNull))
     // cross-side only, re-oriented so the A row leads; equal-length
     // cross pairs arrive in both index/probe orientations and
     // re-orient to the SAME row — distinct unifies them
@@ -1156,12 +1068,10 @@ object Dedup {
         when(col("side_a") === 0, col("sa")).otherwise(col("sb")).as("ca"),
         when(col("side_a") === 0, col("sb")).otherwise(col("sa")).as("cb"))
       .distinct()
-    val out = cands
+    cands
       .select(col("a_id"), col("b_id"),
         expr(s"levenshtein(ca, cb, $maxDist)").as("dist"))
       .filter(col("dist") >= 0)
-    MetricListener.releaseAfterFirstAction(out, t,
-      isnotnull(col("s")) && length(col("s")) < 0, Seq(t))
   }
 
   /** The shared candidate core of the edit-distance joins: `t` is

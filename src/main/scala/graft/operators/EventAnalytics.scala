@@ -149,19 +149,15 @@ object EventAnalytics {
     * is_anomaly 0/1); null values excluded. */
   def robustOutliers(events: DataFrame, groupCol: String, valueCol: String,
                      idCol: String, k: Double = 3.5,
-                     exact: Boolean = true): DataFrame = {
+                     exact: Boolean = true): DataFrame = Caches.scoped { caches =>
     // ONE projected base shared by all four consumers (median window,
     // deviation join, MAD window, and the scoring join) — without the
-    // persist each branch re-scans the source; the cache rides the
-    // standard first-action release hook
-    val base = baseOf(events, groupCol, valueCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val result = base
+    // persist each branch re-scans the source
+    val base = caches.persist(baseOf(events, groupCol, valueCol, idCol))
+    base
       .join(profileFromBase(base, groupCol, idCol, exact), Seq(groupCol))
       .select(col(idCol), col(groupCol), col("value"), col("med"), col("mad"))
       .transform(scoreAgainstProfile(k))
-    MetricListener.releaseAfterFirstAction(result, base,
-      isnotnull(col("value")) && bit_count(hash(col("value"))) < 0, Seq(base))
   }
 
   /** The fitted (group, med, mad) profile alone — the artifact a

@@ -8,45 +8,19 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Session-scoped delivery of `Dataset.observe` metrics to in-process
   * handlers — the shared plumbing behind [[Similarity]]'s skew
-  * warning, [[Components]]'s convergence counter, and the
-  * cache-release hooks ([[once]]).
+  * warning and [[Components]]'s convergence counter.
   *
   * One QueryExecutionListener is registered per session (lazily, on
-  * the first `ensure`/`once`) and dispatches every observed metric to
-  * the matching handlers. Sessions are weak keys so a
-  * stopped-and-dropped SparkSession stays collectable — PROVIDED its
-  * pending once-handlers have drained: a handler held for delivery
-  * references what it captured, which for release hooks reaches back
-  * to the session, so collectability holds for sessions whose
-  * registered queries ran (the normal case), and the pending set is
-  * capped regardless (see [[once]]). The map is synchronized because
+  * the first `ensure`) and dispatches every observed metric to the
+  * matching handlers. Sessions are weak keys so a stopped-and-dropped
+  * SparkSession stays collectable. The map is synchronized because
   * WeakHashMap is not thread-safe. Handlers run on the listener bus
   * thread — keep them cheap and non-blocking. */
 private[graft] object MetricListener {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  private final class Dispatch {
-    // prefix → the ONE session-wide handler for that prefix
-    val prefixHandlers =
-      new java.util.concurrent.ConcurrentHashMap[String, (String, Row) => Unit]()
-    // exact metric name → handler fired at most once, then dropped.
-    // Insertion-ordered and CAPPED: an undelivered handler (its query
-    // was never run, or only failed) strongly references whatever it
-    // captured — for release hooks that is the cached frames and,
-    // through them, the session — so unbounded pending handlers would
-    // both pin storage plans and defeat the weak-session key above.
-    // Past the cap the OLDEST pending handler is dropped with a warn:
-    // for release hooks that re-opens the bounded version of the leak
-    // the hook exists to close, which is the honest trade — a weakly
-    // held handler could be collected between the caller's action
-    // completing and the async listener delivering, silently skipping
-    // release. Bound: <= onceCap closures per session.
-    val onceHandlers =
-      new java.util.LinkedHashMap[String, (String, Row) => Unit]()
-  }
-
-  private val onceCap = 1024
+  // prefix → the ONE session-wide handler for that prefix
+  private type Dispatch =
+    java.util.concurrent.ConcurrentHashMap[String, (String, Row) => Unit]
 
   private val registered = new java.util.WeakHashMap[SparkSession, Dispatch]()
 
@@ -61,13 +35,7 @@ private[graft] object MetricListener {
           override def onSuccess(funcName: String, qe: QueryExecution,
                                  durationNs: Long): Unit =
             qe.observedMetrics.foreach { case (name, row) =>
-              dd.prefixHandlers.forEach { (p, h) =>
-                if (name.startsWith(p)) h(name, row)
-              }
-              val once = dd.onceHandlers.synchronized {
-                dd.onceHandlers.remove(name)
-              }
-              if (once != null) once(name, row)
+              dd.forEach { (p, h) => if (name.startsWith(p)) h(name, row) }
             }
           override def onFailure(funcName: String, qe: QueryExecution,
                                  exception: Exception): Unit = ()
@@ -83,85 +51,12 @@ private[graft] object MetricListener {
     * same (session, prefix) is a no-op even with a DIFFERENT handler
     * (pinned in MetricListenerSpec). The call sites pass stable,
     * capture-free handlers, so this is what keeps re-entrant
-    * operators from stacking one duplicate warning per call; a
-    * per-call handler belongs in [[once]] under a unique name. */
+    * operators from stacking one duplicate warning per call. */
   def ensure(spark: SparkSession, prefix: String)
             (handler: (String, Row) => Unit): Unit = {
-    dispatchFor(spark).prefixHandlers.putIfAbsent(prefix, handler)
+    dispatchFor(spark).putIfAbsent(prefix, handler)
     ()
   }
-
-  /** Register a handler for EXACTLY `name`, delivered at most once —
-    * it is deregistered as it fires. For per-query lifecycle hooks
-    * (cache release keyed on a unique observation name). A second
-    * registration under the same name before delivery replaces the
-    * first.
-    *
-    * Retention contract: until delivered, the handler (and everything
-    * it captures) is strongly held. Pending handlers are capped per
-    * session ([[onceCap]]); past the cap the oldest is dropped with a
-    * warning — so a driver that registers release hooks but never
-    * runs the consuming actions leaks at most the capped tail, and a
-    * session with ANY pending handler is not GC-collectable until
-    * they deliver or fall off the cap. Run the action (or
-    * clearCache()) rather than relying on eviction. */
-  def once(spark: SparkSession, name: String)
-          (handler: (String, Row) => Unit): Unit = {
-    val d = dispatchFor(spark)
-    d.onceHandlers.synchronized {
-      d.onceHandlers.put(name, handler)
-      if (d.onceHandlers.size > onceCap) {
-        val it = d.onceHandlers.entrySet().iterator()
-        val evicted = it.next()
-        it.remove()
-        log.warn(s"MetricListener: dropped pending once-handler " +
-          s"'${evicted.getKey}' (over $onceCap pending — its query was " +
-          "registered but never completed an action; any caches it was " +
-          "meant to release stay resident)")
-      }
-    }
-    ()
-  }
-
-  private val releaseObsId = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Release `caches` after the first completed action that consumes
-    * `result`: observes `observeOn` (a frame already inside `result`'s
-    * query — typically one of the caches) under a unique name, unions
-    * a zero-row twin onto the result (rows/schema/nullability
-    * unchanged; see [[zeroRowTwin]]), and unpersists the caches from a
-    * [[once]] handler when the metric is delivered.
-    *
-    * `opaqueFalse` must be never-true for ALL rows of `observeOn`
-    * INCLUDING nulls: a predicate like `size(arr) < 0` scores -1 on a
-    * null array under legacy (non-ANSI) `sizeOfNull` and would PASS,
-    * injecting fabricated zero rows into the result — guard nullable
-    * inputs with `isnotnull(c) && …` (null-filtering upstream is not
-    * enough; the guard keeps the invariant locally evident). A later action on
-    * the same frame recomputes the caches — persist the RESULT for
-    * multi-pass use. Best-effort: a failed action delivers no
-    * metrics, so the caches then wait for the next successful one.
-    * Cost: the branch re-scans `observeOn` (cached — narrow, no
-    * shuffle) once per action.
-    *
-    * `keepCaches = true` opts OUT: the result is returned untouched
-    * (same rows and schema — the twin contributes zero rows either
-    * way) and the caches stay resident for the caller to reuse across
-    * several actions. The caller then owns their lifetime —
-    * `spark.catalog.clearCache()` (or session end) is the release;
-    * the operators that thread this flag through say so on their
-    * `keepCaches` param. */
-  def releaseAfterFirstAction(result: DataFrame, observeOn: DataFrame,
-                              opaqueFalse: Column,
-                              caches: Seq[DataFrame],
-                              keepCaches: Boolean = false): DataFrame =
-    if (keepCaches) result
-    else {
-      val name = s"graft_release_${releaseObsId.incrementAndGet()}"
-      once(result.sparkSession, name)((_, _) => caches.foreach(_.unpersist(false)))
-      val observed = observeOn.observe(name, count(lit(1)).as("rows"))
-      result.unionByName(zeroRowTwin(observed, opaqueFalse, result.schema))
-    }
 
   /** A zero-row twin of `schema` riding on `observed`: filtered by
     * `opaqueFalse` — a predicate that never passes but that the
@@ -183,7 +78,10 @@ private[graft] object MetricListener {
     * output column nullable — the round-9 ADVICE item); other types
     * fall back to a null literal and DO widen, so keep such columns
     * out of hash-pinned schemas or extend the zero table.
-    * [[releaseAfterFirstAction]] is the packaged form. */
+    * [[Similarity.nearDupPairs]]' skew metric is its one user. Cache
+    * release does not ride a twin: a consumer filter on the result's
+    * columns is pushed into the twin branch, folds to false there and
+    * prunes the branch, CollectMetrics included (see [[Caches]]). */
   def zeroRowTwin(observed: DataFrame, opaqueFalse: Column,
                   schema: StructType): DataFrame =
     observed.filter(opaqueFalse).select(schema.fields.toIndexedSeq.map { f =>

@@ -706,12 +706,11 @@ object Multimodal {
     * 4-rows-per-image chunk equi-join, never an all-pairs compare —
     * the same budget the text SimHash family runs on at 100 TB. */
   def imageNearDups(blobs: DataFrame, maxHamming: Int = 3,
-                    maxBucket: Int = 64,
-                    keepCaches: Boolean = false): DataFrame =
+                    maxBucket: Int = 64): DataFrame =
     Dedup.hammingNearDups(
       imageFingerprints(blobs).filter(col("fp").isNotNull)
         .select(col("id"), col("fp")),
-      maxHamming, maxBucket, keepCaches)
+      maxHamming, maxBucket)
 
   /** INCREMENTAL image near-dup — an arriving image batch against a
     * STANDING fingerprint store (the ingest shape: decode and
@@ -722,12 +721,11 @@ object Multimodal {
     * appends the batch's own fingerprints to the store afterwards —
     * the [[graft.catalog.Catalog.appendPartitioned]] discipline. */
   def imageNearDupsIncremental(newBlobs: DataFrame, corpusFps: DataFrame,
-                               maxHamming: Int = 3, maxBucket: Int = 64,
-                               keepCaches: Boolean = false): DataFrame =
+                               maxHamming: Int = 3, maxBucket: Int = 64): DataFrame =
     Dedup.hammingNearDupsAB(
       imageFingerprints(newBlobs).filter(col("fp").isNotNull)
         .select(col("id"), col("fp")),
-      corpusFps, maxHamming, maxBucket, keepCaches)
+      corpusFps, maxHamming, maxBucket)
 
   /** (offset, length) of every JPEG-compressed video chunk inside an
     * AVI container — the MJPEG case, the one VIDEO container whose

@@ -156,21 +156,15 @@ object Similarity {
     * partitioning can move a centroid by an ulp and flip near-tie
     * assignments — inherent to any distributed float mean.
     *
-    * The projected (id, v) frame is persisted internally
+    * The projected (id, v) frame is persisted for the fit
     * (MEMORY_AND_DISK — a persist changes neither seed nor layout, so
     * the determinism pin above is unaffected): the source is scanned
     * ONCE (the init sample populates the cache) and each Lloyd's
     * iteration reads the cache, not the source — at corpus scale the
     * per-iteration cost drops from a full re-scan to a cached-column
-    * pass plus the k-row shuffle. The cache releases when the first
-    * action consuming the returned `assignments` completes (the
-    * [[MetricListener.releaseAfterFirstAction]] hook); a caller using
-    * only `centroids` and never acting on `assignments` leaves it
-    * resident until then (clearCache() if that matters). A caller
-    * that will act on `assignments` SEVERAL times (e.g. stats then a
-    * store write) passes `keepCaches = true` to reuse the cache across
-    * those actions instead of recomputing it — release is then their
-    * `clearCache()`.
+    * pass plus the k-row shuffle. The cache is unpersisted before
+    * kMeans returns, successful or not: the centroids are local, and
+    * the returned `assignments` re-read the input.
     *
     * Null embeddings and vectors whose length differs from the init
     * sample's dimension are EXCLUDED — from the fit and from the
@@ -185,57 +179,43 @@ object Similarity {
     * separated synthetic clusters, IVF recall over the produced
     * clustering). */
   def kMeans(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-             iters: Int = 10, seed: Long = 7L,
-             keepCaches: Boolean = false): KMeansResult = {
+             iters: Int = 10, seed: Long = 7L): KMeansResult = {
     graft.functions.DotProduct.register(emb.sparkSession)
     require(k >= 1 && iters >= 0, "kMeans needs k >= 1 and iters >= 0")
     val raw = emb.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .filter(col("v").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the init sample's TakeOrdered computes every partition, so this
-    // one action both seeds the centroids AND fills the cache — the
-    // source is never scanned again. The validation failures below
-    // must NOT leave that cache resident (no release hook exists yet
-    // at this point — the round-11 review's leak finding), so they
-    // unpersist on the way out.
-    val (initCentroids, dim) = try {
+    try {
+      // the init sample's TakeOrdered computes every partition, so this
+      // one action both seeds the centroids AND fills the cache — the
+      // source is never scanned again
       val init = raw
         .orderBy(xxhash64(col("id"), lit(seed)).asc, col("id").asc)
         .limit(k).collect()
       require(init.length == k, s"kMeans: need at least k=$k non-null rows")
-      val cs: IndexedSeq[IndexedSeq[Double]] =
+      var centroids: IndexedSeq[IndexedSeq[Double]] =
         init.map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
-      val d = cs.head.length
-      require(cs.forall(_.length == d),
-        s"kMeans: init sample mixes vector dimensions (expected $d); " +
+      val dim = centroids.head.length
+      require(centroids.forall(_.length == dim),
+        s"kMeans: init sample mixes vector dimensions (expected $dim); " +
           "the input must be fixed-dim")
-      (cs, d)
-    } catch {
-      case e: Throwable => raw.unpersist(false); throw e
-    }
-    var centroids = initCentroids
-    val base = raw.filter(size(col("v")) === dim)
-    for (_ <- 0 until iters) {
-      val aggs = count(lit(1)).as("n") +:
-        (0 until dim).map(i => avg(element_at(col("v"), i + 1)).as(s"c$i"))
-      val stats = base.withColumn("cluster", kMeansAssign("v", centroids))
-        .groupBy("cluster").agg(aggs.head, aggs.tail: _*)
-        .collect()
-      val next = centroids.toArray
-      stats.foreach { r =>
-        next(r.getInt(0)) = (0 until dim).map(i => r.getDouble(i + 2)).toIndexedSeq
+      val base = raw.filter(size(col("v")) === dim)
+      for (_ <- 0 until iters) {
+        val aggs = count(lit(1)).as("n") +:
+          (0 until dim).map(i => avg(element_at(col("v"), i + 1)).as(s"c$i"))
+        val stats = base.withColumn("cluster", kMeansAssign("v", centroids))
+          .groupBy("cluster").agg(aggs.head, aggs.tail: _*)
+          .collect()
+        val next = centroids.toArray
+        stats.foreach { r =>
+          next(r.getInt(0)) = (0 until dim).map(i => r.getDouble(i + 2)).toIndexedSeq
+        }
+        centroids = next.toIndexedSeq
       }
-      centroids = next.toIndexedSeq
-    }
-    val assignments = base.withColumn("cluster", kMeansAssign("v", centroids))
-      .select(col("id").as(idCol), col("cluster"))
-    // size(v) < 0 is null-safe here because `raw` pre-filters null
-    // vectors — the isNotNull guard makes the predicate's never-true
-    // property locally evident rather than coupled to that filter
-    KMeansResult(centroids,
-      MetricListener.releaseAfterFirstAction(assignments, raw,
-        isnotnull(col("v")) && size(col("v")) < 0, Seq(raw), keepCaches))
+      KMeansResult(centroids, base.withColumn("cluster", kMeansAssign("v", centroids))
+        .select(col("id").as(idCol), col("cluster")))
+    } finally raw.unpersist(false)
   }
 
   /** Per-vector (id, nearest cluster, FIXED-POINT squared distance
@@ -652,21 +632,12 @@ object Similarity {
     * union branch — no extra job, no extra shuffle; see the in-code
     * note on why the branch placement matters under AQE) and a
     * session-level listener logs a warning with the dropped-bucket
-    * count when the consuming action completes. `false` silences the
-    * warning (for callers auditing the caps themselves); the metric
-    * branch still rides, because it doubles as the cache-release
-    * hook.
+    * count when the consuming action completes. `false` drops the
+    * metric branch and the warning (for callers auditing the caps
+    * themselves).
     *
-    * Cache lifecycle: the three internal persists (vectors, the
-    * bucket-partitioned band table, bucket histogram) release
-    * automatically when the
-    * FIRST action consuming the returned frame completes — a later
-    * action recomputes them, so persist the RESULT if you need
-    * several passes, or pass `keepCaches = true` to pin the internal
-    * caches across actions instead (release is then your
-    * clearCache()). A caller that never runs an action leaves only
-    * the eagerly-counted vector cache resident (clearCache() if that
-    * matters). */
+    * The three internal caches (vectors, the bucket-partitioned band
+    * table, bucket histogram) follow the [[Caches]] lifecycle. */
   /** The seeded band → bit-index assignment: each band reads `r`
     * distinct bit positions from the shared `pool`. Deterministic in
     * (bands, pool, r, seed); shared by [[nearDupPairs]] and its DuckDB
@@ -697,21 +668,16 @@ object Similarity {
                    threshold: Double, dim: Int = 64, numBits: Int = 0,
                    bands: Int = 16, bitsPerBand: Int = 0,
                    seed: Long = 7L, maxBucket: Int = 0,
-                   targetBucket: Int = 32, skewWarn: Boolean = true,
-                   keepCaches: Boolean = false): DataFrame = {
+                   targetBucket: Int = 32,
+                   skewWarn: Boolean = true): DataFrame = Caches.scoped { caches =>
     graft.functions.DotProduct.register(emb.sparkSession)
     // Pool size depends on n, and n needs a count — so persist the raw
     // (id, vec) projection FIRST and count THAT: the input is scanned
     // exactly once, the count job populates the cache, and the same
     // cached frame later serves the candidate-verify vector lookups.
-    // All three caches below (base / withBits / sizes) unpersist via
-    // the MetricListener.once release hook at the end of this function
-    // — the round-9 verdict flagged them as permanent residents in a
-    // long-lived driver.
     val wide = Spread.ensureWidth(emb)
-    val base = wide.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = caches.persist(wide.select(col(idCol).as("id"),
+        col(vecCol).cast("array<double>").as("v")))
     val n = base.count()
     val (adaptR, adaptPool, adaptMaxB) = adaptiveBandParams(n, targetBucket)
     val r = if (bitsPerBand > 0) bitsPerBand else adaptR
@@ -746,24 +712,15 @@ object Similarity {
     // pinned at defaultParallelism — the self-join amplifies band rows
     // into candidate pairs, so AQE byte-based coalescing would
     // under-parallelize the probe stage.
-    val chunks = withBits
+    val chunks = caches.fill(withBits
       .select(col("id"), explode(array(bandStructs: _*)).as("bs"))
       .select(col("id"), col("bs.band"), col("bs.sig"))
       .repartition(emb.sparkSession.sparkContext.defaultParallelism,
-        col("band"), col("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager materialization; if it or any downstream construction
-    // throws, unpersist instead of leaking the caches until session
-    // end — the release hook only registers at the end (r21 ADVICE)
-    try chunks.count()
-    catch { case e: Throwable =>
-      Seq(base, chunks).foreach(_.unpersist(false)); throw e
-    }
+        col("band"), col("sig")))
     // bucket histogram: aggregates the cache in place (co-partitioned,
     // no exchange); persisted because it feeds the prune join AND the
     // skew-accounting observe branch below
-    val sizes = chunks.groupBy("band", "sig").count()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sizes = caches.persist(chunks.groupBy("band", "sig").count())
     // MERGE hints: both joins read the (band, sig)-partitioned cache,
     // so sort-merge joins them with no exchange and no per-task
     // broadcast build (the planner's size estimate would broadcast the
@@ -800,30 +757,20 @@ object Similarity {
     // emptiness — the metric fires on every consuming action, once
     // (the node appears exactly once in the plan). Cost: one extra
     // scan of the CACHED bucket histogram + a partial agg, no shuffle.
-    // the warning handler matches only the "skew"-prefixed names, so
-    // skewWarn=false calls observe under a different prefix and stay
-    // silent while the release hook (exact-name, fires once) still runs
-    val obsName = (if (skewWarn) "graft_neardup_skew_"
-                   else "graft_neardup_quiet_") + skewObsId.incrementAndGet()
-    if (skewWarn) ensureSkewListener(emb.sparkSession)
-    // keepCaches=true (multi-pass callers) keeps all three caches
-    // resident — only the release hook is skipped; the skew-accounting
-    // observation below fires either way
-    if (!keepCaches)
-      MetricListener.once(emb.sparkSession, obsName) { (_, _) =>
-        // non-blocking: runs on the listener bus thread
-        Seq(base, chunks, sizes).foreach(_.unpersist(false))
-      }
-    val observed = sizes.observe(obsName,
-      coalesce(sum(when(col("count") > maxB, col("count"))), lit(0L))
-        .as("dropped_band_rows"),
-      count(when(col("count") > maxB, lit(1))).as("dropped_buckets"),
-      coalesce(max(lit(maxB.toLong)), lit(maxB.toLong)).as("cap"))
-    // zero-row twin, not null literals: a null-literal branch would
-    // mark every output column nullable (round-9 ADVICE), changing the
-    // result schema between code paths
-    result.unionByName(MetricListener.zeroRowTwin(
-      observed, col("count") < 0, result.schema))
+    if (!skewWarn) result
+    else {
+      ensureSkewListener(emb.sparkSession)
+      val observed = sizes.observe(s"graft_neardup_skew_${skewObsId.incrementAndGet()}",
+        coalesce(sum(when(col("count") > maxB, col("count"))), lit(0L))
+          .as("dropped_band_rows"),
+        count(when(col("count") > maxB, lit(1))).as("dropped_buckets"),
+        coalesce(max(lit(maxB.toLong)), lit(maxB.toLong)).as("cap"))
+      // zero-row twin, not null literals: a null-literal branch would
+      // mark every output column nullable (round-9 ADVICE), changing the
+      // result schema between code paths
+      result.unionByName(MetricListener.zeroRowTwin(
+        observed, col("count") < 0, result.schema))
+    }
   }
 
   /** Symmetric per-vector int8 quantization: scale = max |v_i|,

@@ -328,25 +328,21 @@ object TextAnalysis {
     * only the exchange's key distribution changes — the stopword-heavy
     * hot keys never shuffle.
     *
-    * Both returned caches (tf, per-term stats) MUST be released by the
-    * caller — every public consumer threads them into the
-    * [[MetricListener]] release hook or honors `keepCaches`. tf feeds
-    * three consumers (stats agg, hot join, tail join) and the stats
+    * Both caches (tf, per-term stats) live in the caller's `caches`
+    * scope. tf feeds three consumers (stats agg, hot join, tail join) and the stats
     * frame two; ReuseExchange does NOT collapse the repeats (the join
     * consumers push isnotnull(term) below the agg, so the subtrees
     * canonicalize differently), and at corpus scale re-running the
     * tokenize+explode per consumer triples the heaviest scan. */
-  private def termStatsJoined(docs: DataFrame, idCol: String,
-                              textCol: String, hotTerms: Int):
+  private def termStatsJoined(caches: Caches.Scope, docs: DataFrame,
+                              idCol: String, textCol: String, hotTerms: Int):
       (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val toks = docs.select(col(idCol).as("doc_id"),
       explode(tokens(textCol)).as("term"))
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val stats = tf.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val tf = caches.persist(
+      toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
+    val stats = caches.persist(tf.groupBy("term")
+      .agg(count(lit(1)).as("df"), sum("tf").as("cf")))
     val hot = broadcast(stats.orderBy(col("df").desc, col("term").asc)
       .limit(hotTerms))
     val joined = tf.join(hot, Seq("term"))
@@ -357,9 +353,8 @@ object TextAnalysis {
   }
 
   def tfidfTop(docs: DataFrame, idCol: String, textCol: String,
-               k: Int = 3, hotTerms: Int = 1024,
-               keepCaches: Boolean = false): DataFrame = {
-    val (joined, tf, dfreq) = termStatsJoined(docs, idCol, textCol, hotTerms)
+               k: Int = 3, hotTerms: Int = 1024): DataFrame = Caches.scoped { caches =>
+    val (joined, _, _) = termStatsJoined(caches, docs, idCol, textCol, hotTerms)
     val n = docs.agg(count(lit(1)).as("n"))
     // per-doc top-k through the shared Skew.saltedTopK dispatch — the
     // SAME plan as the direct row_number window at typical k (k ≤ the
@@ -372,21 +367,11 @@ object TextAnalysis {
     val scored = joined
       .crossJoin(broadcast(n))
       .withColumn("score", col("tf") * log(col("n") / col("df")))
-    val result = Skew.saltedTopK(scored, Seq("doc_id"),
+    Skew.saltedTopK(scored, Seq("doc_id"),
         Seq(col("score").desc, col("term").asc), k,
         saltCols = Seq(col("doc_id"), col("score"), col("term")))
       .select(col("doc_id"), col("term"), round(col("score"), 6).as("score"),
               col("rn"))
-    // cache release after the first consuming action: an invisible
-    // zero-row branch over the cached term-stats table keeps a
-    // CollectMetrics node in the final stage (AQE-safe — see
-    // MetricListener.zeroRowTwin), and the once-handler unpersists
-    // both caches when it fires. A later action on the same frame
-    // recomputes them; persist the result for multi-pass use — or
-    // keepCaches=true to pin tf/dfreq across actions (release is then
-    // the caller's clearCache()).
-    MetricListener.releaseAfterFirstAction(result, dfreq,
-      isnotnull(col("df")) && col("df") < 0, Seq(tf, dfreq), keepCaches)
   }
 
   /** BM25 top-k terms per document — [[tfidfTop]]'s saturating,
@@ -405,8 +390,8 @@ object TextAnalysis {
     * oracle hash-match at round(…, 6)). */
   def bm25Top(docs: DataFrame, idCol: String, textCol: String,
               k: Int = 3, k1: Double = 1.2, b: Double = 0.75,
-              hotTerms: Int = 1024, keepCaches: Boolean = false): DataFrame = {
-    val (joined, tf, stats) = termStatsJoined(docs, idCol, textCol, hotTerms)
+              hotTerms: Int = 1024): DataFrame = Caches.scoped { caches =>
+    val (joined, tf, _) = termStatsJoined(caches, docs, idCol, textCol, hotTerms)
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val totals = dl.agg(count(lit(1)).as("n"), sum("dl").as("total_tokens"))
     val scored = joined.join(dl, Seq("doc_id"))
@@ -418,13 +403,11 @@ object TextAnalysis {
       .withColumn("score", col("idf") * (col("tf") * lit(k1 + 1d)) /
         (col("tf") + lit(k1) *
           (lit(1d - b) + lit(b) * col("dl") / col("avgdl"))))
-    val result = Skew.saltedTopK(scored, Seq("doc_id"),
+    Skew.saltedTopK(scored, Seq("doc_id"),
         Seq(col("score").desc, col("term").asc), k,
         saltCols = Seq(col("doc_id"), col("score"), col("term")))
       .select(col("doc_id"), col("term"), round(col("score"), 6).as("score"),
               col("rn"))
-    MetricListener.releaseAfterFirstAction(result, stats,
-      isnotnull(col("df")) && col("df") < 0, Seq(tf, stats), keepCaches)
   }
 
   /** Per-document unigram cross-entropy against the corpus's own
@@ -444,19 +427,16 @@ object TextAnalysis {
     * (≤ 5·10⁻¹⁰·terms) three orders below the 10⁻⁶ rounding unit.
     * Same frequency-split join and cache discipline as [[tfidfTop]]. */
   def unigramCrossEntropy(docs: DataFrame, idCol: String, textCol: String,
-                          hotTerms: Int = 1024,
-                          keepCaches: Boolean = false): DataFrame = {
-    val (joined, tf, stats) = termStatsJoined(docs, idCol, textCol, hotTerms)
+                          hotTerms: Int = 1024): DataFrame = Caches.scoped { caches =>
+    val (joined, _, stats) = termStatsJoined(caches, docs, idCol, textCol, hotTerms)
     val totals = stats.agg(sum("cf").as("t_total"))
-    val result = joined.crossJoin(broadcast(totals))
+    joined.crossJoin(broadcast(totals))
       .withColumn("contrib",
         round(col("tf") * log(col("cf").cast("double") /
           col("t_total").cast("double")) * lit(1e9)).cast("bigint"))
       .groupBy("doc_id")
       .agg(round(-(sum(col("contrib")).cast("double") / lit(1e9)) /
         sum(col("tf")).cast("double"), 6).as("xent"))
-    MetricListener.releaseAfterFirstAction(result, stats,
-      isnotnull(col("cf")) && col("cf") < 0, Seq(tf, stats), keepCaches)
   }
 
   /** Per-document token-distribution stats — the Gopher-family
@@ -1474,7 +1454,7 @@ object TextAnalysis {
     * term (term, cnt_a, cnt_b, drift round-6) with the corpus-wide
     * `total_tv` round-6 on every row. */
   def termDrift(a: DataFrame, b: DataFrame, textCol: String,
-                topK: Int = 50): DataFrame = {
+                topK: Int = 50): DataFrame = Caches.scoped { caches =>
     require(topK >= 1, "termDrift needs topK >= 1")
     def counts(df: DataFrame, out: String) =
       df.select(explode(tokens(textCol)).as("term"))
@@ -1483,13 +1463,11 @@ object TextAnalysis {
     val cb = counts(b, "cnt_b")
     // the final plan reads this frame FOUR times (totals, the TV
     // scalar, and the top-K branch each re-reach it) — persist so the
-    // corpus-wide tokenize+count+join runs once; released by the
-    // standard first-action hook
-    val joined = ca.join(cb, Seq("term"), "full_outer")
+    // corpus-wide tokenize+count+join runs once
+    val joined = caches.persist(ca.join(cb, Seq("term"), "full_outer")
       .select(col("term"),
         coalesce(col("cnt_a"), lit(0L)).as("cnt_a"),
-        coalesce(col("cnt_b"), lit(0L)).as("cnt_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        coalesce(col("cnt_b"), lit(0L)).as("cnt_b")))
     val totals = joined.agg(sum(col("cnt_a")).as("na"),
       sum(col("cnt_b")).as("nb"))
     val crossed = joined.crossJoin(broadcast(totals))
@@ -1503,15 +1481,13 @@ object TextAnalysis {
       .select(round(col("sum_cross").cast("double")
         / (lit(2.0) * col("na").cast("double") * col("nb").cast("double")),
         6).as("total_tv"))
-    val result = crossed
+    crossed
       .orderBy(col("cross").desc, col("term"))
       .limit(topK)
       .withColumn("drift", round(col("cross").cast("double")
         / (col("na").cast("double") * col("nb").cast("double")), 6))
       .select(col("term"), col("cnt_a"), col("cnt_b"), col("drift"))
       .crossJoin(broadcast(tv))
-    graft.operators.MetricListener.releaseAfterFirstAction(result, joined,
-      isnotnull(col("term")) && length(col("term")) < 0, Seq(joined))
   }
 
   /** The MERGEABLE form of [[sourceStats]] — the incremental-pipeline

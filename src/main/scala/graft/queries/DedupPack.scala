@@ -196,7 +196,6 @@ object DedupPack extends QueryPack {
     // whole bundle, and the oracle replays every flag from the same
     // recursive-CTE walk as the *_exact trio
     "q_dedup_bundle" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{bit_count, isnotnull}
       val docs = Tables.documents(s, d)
       val bundle = Dedup.bundle(docs, "doc_id",
         Dedup.exactJaccardPairs(docs, "doc_id", "text", threshold = 0.8))
@@ -209,14 +208,12 @@ object DedupPack extends QueryPack {
           coalesce(col("canon0"), lit(0)).as("is_canonical"),
           coalesce(col("kept0"), lit(0)).as("kept"))
       // this gate query is a SINGLE-action consumer of the bundle, so
-      // the caller-owned caches (pairs + clusters) ride the standard
-      // first-action release hook instead of leaking until the
+      // the caller-owned caches (pairs + clusters) are released after
+      // the first action that uses them instead of leaking until the
       // harness's clearCache (the multi-action production consumer
       // calls bundle.release() itself — see Dedup.bundle's doc)
-      graft.operators.MetricListener.releaseAfterFirstAction(joined,
-        bundle.clusters,
-        isnotnull(col("cluster_id")) && bit_count(col("cluster_id")) < 0,
-        Seq(bundle.pairs, bundle.clusters))
+      graft.operators.Caches.releaseOnFirstUse(Seq(bundle.pairs, bundle.clusters))
+      joined
     }),
 
     // the CC kernel under a DuckDB-recursive-CTE hash oracle: edges
@@ -473,16 +470,13 @@ object DedupPack extends QueryPack {
           col("support"))),
 
     "q_dedup_bundle" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{bit_count, isnotnull}
       val docs = Tables.documents(s, d)
       val bundle = Dedup.bundle(docs, "doc_id",
         Dedup.exactJaccardPairs(docs, "doc_id", "text", threshold = 0.8))
       bundle.clusters.count()
       bundle.canonical.count()
-      graft.operators.MetricListener.releaseAfterFirstAction(
-        bundle.deduped, bundle.clusters,
-        isnotnull(col("cluster_id")) && bit_count(col("cluster_id")) < 0,
-        Seq(bundle.pairs, bundle.clusters))
+      graft.operators.Caches.releaseOnFirstUse(Seq(bundle.pairs, bundle.clusters))
+      bundle.deduped
     }),
 
   )

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 import org.apache.spark.sql.types.DecimalType
 import scala.collection.mutable
 import graft.{LocalSession, SparkEntry}
+import graft.operators.Caches
 
 /** Per-query probes for optimization work, on the Bench session.
   *
@@ -17,7 +18,9 @@ import graft.{LocalSession, SparkEntry}
   * output digest does), `clearCache` between runs, and
   * `SPARK_GRAFT_BENCH_RUNS` (default 3) trials interleaved across the
   * queries, so host drift hits every query alike. It prints each
-  * trial, a median and min per query, and then each trial's job and
+  * trial, with the cached relations the trial left after its action
+  * (polled briefly, since operator caches are released on the listener
+  * bus), a median and min per query, and then each trial's job and
   * stage counts and its stages: wall, executor run time, shuffle
   * read/write and tasks.
   *
@@ -103,9 +106,10 @@ object Probe {
       val n = consumeAll(qs(name)(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.clearJobGroup()
+      val cached = Caches.residentAfter(spark, 2000L)
       spark.catalog.clearCache()
       runs(name) = runs(name) :+ sec
-      println(f"trial $t  $name%-28s $sec%8.3f s  ($n rows)")
+      println(f"trial $t  $name%-28s $sec%8.3f s  ($n rows, $cached cached after)")
     }
     println("--- medians")
     names.foreach { name =>

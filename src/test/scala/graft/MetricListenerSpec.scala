@@ -2,14 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.operators.MetricListener
 
 /** Contract pins for the shared observe-metric plumbing: ensure's
-  * first-registration-wins rule, once's exactly-once delivery, and the
-  * cache-release hook's schema transparency. Listener delivery is
-  * async (bus thread), so assertions poll with a deadline instead of
-  * parking. */
+  * first-registration-wins rule and the zero-row twin's schema
+  * transparency. Listener delivery is async (bus thread), so
+  * assertions poll with a deadline instead of parking. */
 class MetricListenerSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
@@ -37,59 +35,6 @@ class MetricListenerSpec extends AnyFunSuite {
     df.collect()
     assert(await(hits.get >= 2))
     assert(wrong.get === 0)
-  }
-
-  test("once: exact-name handler fires exactly once, then deregisters") {
-    val spark2 = spark
-    import spark2.implicits._
-    val hits = new java.util.concurrent.atomic.AtomicInteger(0)
-    MetricListener.once(spark, "graft_mls_once_a")((_, _) => hits.incrementAndGet())
-    val df = Seq(1, 2).toDF("x")
-      .observe("graft_mls_once_a", count(lit(1)).as("n"))
-    df.collect()
-    assert(await(hits.get === 1), "once handler never fired")
-    df.collect() // second delivery of the same name: handler is gone
-    Thread.sleep(500)
-    assert(hits.get === 1, "once handler fired more than once")
-  }
-
-  test("releaseAfterFirstAction: caches unpersist; rows/schema/nullability unchanged") {
-    val spark2 = spark
-    import spark2.implicits._
-    val cache = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "s")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val result = cache.groupBy("s").agg(count(lit(1)).as("cnt"))
-    // opaque false: the optimizer has no bounds for id (rand() < -1
-    // would be folded away, branch and metric with it)
-    val wrapped = MetricListener.releaseAfterFirstAction(
-      result, cache, col("id") < -1, Seq(cache))
-    // schema equality INCLUDING nullability: the zero-row twin must
-    // not widen non-nullable columns (the null-literal hazard)
-    assert(wrapped.schema === result.schema)
-    val rows = wrapped.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(rows === Map("a" -> 2L, "b" -> 1L))
-    assert(await(cache.storageLevel == StorageLevel.NONE),
-      "cache still resident after the consuming action")
-  }
-
-  test("releaseAfterFirstAction keepCaches=true: caches stay resident across actions") {
-    val spark2 = spark
-    import spark2.implicits._
-    val cache = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val result = cache.groupBy("s").agg(count(lit(1)).as("cnt"))
-      val wrapped = MetricListener.releaseAfterFirstAction(
-        result, cache, col("id") < -1, Seq(cache), keepCaches = true)
-      assert(wrapped.schema === result.schema) // same shape either way
-      wrapped.collect()
-      wrapped.collect()
-      // the async release (if wrongly registered) would land well
-      // inside this window — poll the NEGATIVE briefly
-      Thread.sleep(1500)
-      assert(cache.storageLevel == StorageLevel.MEMORY_AND_DISK,
-        "keepCaches=true must leave the cache pinned; release is the caller's")
-    } finally cache.unpersist()
   }
 
   test("zeroRowTwin: opaque-false branch is empty and type-faithful") {

@@ -300,8 +300,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // (map-side explode) — a unionAll of two projections re-evaluates
     // the whole gram join (measured 2× at sf1). Pin: exactly one
     // shuffle (the pair-count aggregate); a union regression doubles
-    // it. (A Union IS present by design — the MetricListener release
-    // hook's never-true branch — so count exchanges, not unions.)
+    // it. (Count exchanges, not unions: the doubled shuffle is the
+    // cost a union regression adds.)
     assert(p.contains("Generate explode"),
       s"containment directions are not a map-side explode:\n$p")
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1,

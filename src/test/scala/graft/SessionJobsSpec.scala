@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.Catalog
 import graft.operators.Traffic
 
-/** The jobs a REPL session's CSV put and multiread submit: the CSV
-  * header is read once per file version, and each of multiread's
+/** The jobs a REPL session's CSV put, get and multiread submit: the
+  * CSV header is read once per file version, and each of multiread's
   * reads is one job. */
 class SessionJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -85,7 +85,8 @@ class SessionJobsSpec extends AnyFunSuite {
     cat.putBlob("blob", Array.fill[Byte](64)(1))
     for (name <- Seq("pq", "csv", "blob"); m <- Seq(1, 4)) {
       val expected = cat.get(name).count()
-      // a csv entry's get infers its header; parquet and blob gets run none
+      // a csv entry's header was inferred by the first get above;
+      // parquet and blob gets never infer, so a get runs no job here
       val getJobs = allJobs(cat.get(name))._2
       val (counts, jobs) = allJobs(cat.multiread(name, m))
       assert(counts === Seq.fill(m)(expected), name)
@@ -93,5 +94,28 @@ class SessionJobsSpec extends AnyFunSuite {
     }
     assert(cat.get("pq").count() === 500L)
     assert(cat.get("blob").count() === 1L)
+  }
+
+  test("a second get of a csv entry submits no job") {
+    val cat = new Catalog(spark, Files.createTempDirectory("graft-sj-cat").toString)
+    cat.put("t", Seq((1, "a"), (2, "b")).toDF("id", "v"), format = "csv",
+      options = Map("header" -> "true"))
+    val first = cat.get("t")
+    val (again, jobs) = allJobs(cat.get("t"))
+    assert(jobs === 0)
+    assert(again.schema === first.schema)
+    assert(again.columns.toSeq === Seq("id", "v"))
+    assert(again.as[(String, String)].collect().toSet === Set(("1", "a"), ("2", "b")))
+  }
+
+  test("a csv re-put with a new header reads the new columns") {
+    val cat = new Catalog(spark, Files.createTempDirectory("graft-sj-cat").toString)
+    val opts = Map("header" -> "true")
+    cat.put("t", Seq((1, "a")).toDF("id", "v"), format = "csv", options = opts)
+    assert(cat.get("t").columns.toSeq === Seq("id", "v"))
+    cat.put("t", Seq((7, "x", 9L)).toDF("k", "w", "z"), format = "csv", options = opts)
+    val got = cat.get("t")
+    assert(got.columns.toSeq === Seq("k", "w", "z"))
+    assert(got.as[(String, String, String)].collect().toSeq === Seq(("7", "x", "9")))
   }
 }

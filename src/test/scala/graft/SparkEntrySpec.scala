@@ -34,9 +34,21 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("every query runs and returns rows at sf0.001") {
-    val empty = SparkEntry.queries.collect {
-      case (name, fn) if fn(spark, SparkSuite.sf0001).count() == 0 => name
+    // and leaves no cached relation once its first action is done:
+    // operator caches are released by the action that reads them, on
+    // the listener bus, so the check polls. A query that leaves some
+    // is cleared after, so each query is judged on its own.
+    spark.catalog.clearCache()
+    val runs = SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val rows = fn(spark, SparkSuite.sf0001).count()
+      val left = graft.operators.Caches.residentAfter(spark, 5000L)
+      if (left > 0) spark.catalog.clearCache()
+      (name, rows, left)
     }
+    val empty = runs.collect { case (name, 0L, _) => name }
     assert(empty.isEmpty, s"queries with zero rows at sf0.001: $empty")
+    val residue = runs.collect { case (name, _, left) if left > 0 => s"$name ($left)" }
+    assert(residue.isEmpty,
+      s"queries leaving cached relations after their first action: ${residue.mkString(", ")}")
   }
 }
