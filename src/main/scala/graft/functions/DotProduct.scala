@@ -97,6 +97,6 @@ object DotProduct {
     * (Column-from-Expression construction is not public API in
     * Spark 4; the function registry is). Idempotent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
+    NativeFunctions.register(spark,
+      "graft_dot", exprs => DotProduct(exprs.head, exprs(1)))
 }

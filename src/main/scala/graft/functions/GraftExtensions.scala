@@ -47,3 +47,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         children(1).eval() match { case i: Int => i; case l: Long => l.toInt })))
   }
 }
+
+/** The per-session registration path behind each native function's
+  * `register`. Operators call `register` on every use, so a name the
+  * session's registry already holds is left as it is: replacing it
+  * would change nothing but log a `replaced a previously registered
+  * function` warning per call. */
+private[functions] object NativeFunctions {
+  def register(spark: org.apache.spark.sql.SparkSession, name: String,
+               builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
+}

@@ -140,12 +140,10 @@ object GramHashes {
   /** Register `graft_chargrams(text, n)` / `graft_shingles(text, w)`
     * (n, w foldable literals). Idempotent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_chargrams", exprs => CharGramHashes(exprs.head, litInt(exprs(1))),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs => WordShingleHashes(exprs.head, litInt(exprs(1))),
-      "built-in")
+    NativeFunctions.register(spark,
+      "graft_chargrams", exprs => CharGramHashes(exprs.head, litInt(exprs(1))))
+    NativeFunctions.register(spark,
+      "graft_shingles", exprs => WordShingleHashes(exprs.head, litInt(exprs(1))))
   }
 
   private def litInt(e: Expression): Int = e.eval() match {

@@ -113,7 +113,7 @@ object MinHashSignature {
     * be foldable literals (they parameterize the generated loop).
     * Idempotent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    NativeFunctions.register(spark,
       "graft_minhash", exprs => {
         val k = exprs(1).eval() match {
           case i: Int => i
@@ -124,5 +124,5 @@ object MinHashSignature {
           case i: Int => i.toLong
         }
         MinHashSignature(exprs.head, k, seed)
-      }, "built-in")
+      })
 }

@@ -66,6 +66,6 @@ object NfcNormalize {
   /** Register as a SQL function (same registry path as
     * [[RollingHash.register]]). Idempotent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs.head), "built-in")
+    NativeFunctions.register(spark,
+      "graft_nfc", exprs => NfcNormalize(exprs.head))
 }

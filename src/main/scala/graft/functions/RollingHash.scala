@@ -77,6 +77,6 @@ object RollingHash {
     * (Column-from-Expression construction is not public API in
     * Spark 4; the function registry is). Idempotent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
+    NativeFunctions.register(spark,
+      "rolling_hash", exprs => RollingHash(exprs.head))
 }

@@ -93,6 +93,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 object SimHash64 {
   /** Register as `graft_simhash(hashes)`. Idempotent. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64(exprs.head), "built-in")
+    NativeFunctions.register(spark,
+      "graft_simhash", exprs => SimHash64(exprs.head))
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -53,45 +56,45 @@ object Components {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  // Convergence-metric plumbing: `Observation.get` is the only public
-  // reader and it BLOCKS (its non-blocking siblings are private[sql]),
-  // so a bounded wait on it can only be built by parking a thread —
-  // which leaks that thread forever if delivery never comes. Instead
-  // the metric is observed under a unique name and delivered into this
-  // map by a once-per-session listener ([[MetricListener]]); the loop
-  // POLLS the map with a deadline, so nothing ever parks. Entries are
-  // removed as read; a metric that arrives after its deadline leaves
-  // at most one stale long per timed-out call (observeBroken stops
-  // further observes).
-  /** Below this many edge rows, per-round convergence is counted
-    * explicitly against the round's checkpoint instead of observed:
-    * the count is a tens-of-ms scan of a cached two-long frame,
-    * cheaper than waiting out async listener-bus metric delivery.
-    * Above it, the one-action observe path wins (its whole point is
-    * avoiding an extra pass that actually costs something). */
-  private[graft] val observeMinEdges = 1L << 20
+  /** How long a distributed round waits for its observed convergence
+    * count after the checkpoint returns. Spark completes the round's
+    * `Observation` from its own listener, a median 0.6 ms (max 1.2 ms)
+    * after the checkpoint (a 250-edge CC-shaped round on local[8] with
+    * two other QueryExecutionListeners registered, 2 runs × 10
+    * rounds), while an explicit count of the checkpoint costs a
+    * median 94-112 ms per round. The wait is an `Await` on the public
+    * `Observation.future`, on the caller's thread: nothing stays
+    * parked when it expires. Past the deadline the loop counts
+    * explicitly for the rest of the call ([[RoundCounter]]).
+    * [[Similarity.nearDupPairs]]' skew count uses the same deadline. */
+  private[operators] val observeDeadline = 120.seconds
 
-  private val ccObsId = new java.util.concurrent.atomic.AtomicLong(0)
-  private val ccMetrics =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** One distributed loop's convergence counter. [[checkpoint]]
+    * materializes a round's frame and returns it with the number of
+    * its rows where `cond` holds. The count is observed in the same
+    * pass, so a round is one action; once an observation misses
+    * [[observeDeadline]], this and every later round of the call
+    * count explicitly against the checkpoint instead. */
+  private final class RoundCounter(loop: String) {
+    private var observing = true
 
-  private def ensureCcListener(spark: org.apache.spark.sql.SparkSession): Unit =
-    MetricListener.ensure(spark, "graft_cc_lowered_") { (name, row) =>
-      ccMetrics.put(name, row.getAs[Long]("lowered"))
-    }
-
-  // same plumbing for the truss peel's survivor count (the kTruss
-  // round's convergence metric rides its checkpoint pass, the
-  // connectedComponents discipline)
-  private val trussObsId = new java.util.concurrent.atomic.AtomicLong(0)
-  private val trussMetrics =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def ensureTrussListener(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    MetricListener.ensure(spark, "graft_truss_next_") { (name, row) =>
-      trussMetrics.put(name, row.getAs[Long]("nxt"))
-    }
+    def checkpoint(df: DataFrame, cond: Column): (DataFrame, Long) =
+      if (observing) {
+        val obs = Observation()
+        val chk = df.observe(obs, count(when(cond, 1)).as("n")).localCheckpoint()
+        try (chk, Await.result(obs.future, observeDeadline).getLong(0))
+        catch {
+          case _: TimeoutException =>
+            observing = false
+            log.warn(s"$loop: convergence count not delivered within " +
+              s"$observeDeadline; counting explicitly for the remaining rounds")
+            (chk, chk.filter(cond).count())
+        }
+      } else {
+        val chk = df.localCheckpoint()
+        (chk, chk.filter(cond).count())
+      }
+  }
 
   /** Edge count at or below which the transitive closure is solved
     * ON THE DRIVER (union-find over the collected edge list) instead
@@ -186,21 +189,9 @@ object Components {
     // sym is materialized by the checkpoint above; the raw orientation
     // is no longer needed
     e1.unpersist()
-    ensureCcListener(edges.sparkSession)
+    val rounds = new RoundCounter("connectedComponents")
     var converged = false
     var iter = 0
-    // once a single metric misses its deadline, stop observing (the
-    // delivery path is evidently broken in this session) and use the
-    // explicit count for the remaining rounds. SMALL graphs start on
-    // the count path outright: the observe trick saves a full pass
-    // over the labels, which only pays once that pass is expensive —
-    // below ~1M edges a count of the round's CHECKPOINTED two-long
-    // frame is tens of ms, while metric delivery rides the async
-    // listener bus at 100s of ms per round (measured: the embedding
-    // near-dup graph at sf0.1, 249 edges, spent most of each ~0.9 s
-    // round waiting on delivery). Same labels, same convergence —
-    // only the convergence COUNTER's mechanism switches.
-    var observeBroken = edgeRows < observeMinEdges
     while (!converged && iter < maxIter) {
       // neighbor-min: smallest label among my neighbors
       val nbrMin = sym
@@ -211,39 +202,15 @@ object Components {
           least(col("comp"), coalesce(col("nbr"), col("comp"))).as("mid"))
       // pointer jump: follow my label to ITS label (labels only ever
       // decrease, so the jump target is ≤ mid when present)
-      val obsName = s"graft_cc_lowered_${ccObsId.incrementAndGet()}"
       val jumped = lowered
         .join(labels.select(col("id").as("mid"), col("comp").as("jump")),
           Seq("mid"), "left")
         .select(col("id"), col("old"),
           least(col("mid"), coalesce(col("jump"), col("mid"))).as("comp"))
-      val next =
-        (if (observeBroken) jumped
-         else jumped.observe(obsName,
-           count(when(col("comp") < col("old"), 1)).as("lowered")))
-          .localCheckpoint()
-      // the eager checkpoint IS the round's one action; the metric is
-      // collected during it, so reading it launches no job — the poll
-      // below only waits out the listener-bus delivery (normally
-      // milliseconds). On deadline, fall back to an explicit
-      // cache-backed count, permanently: the loop degrades to the old
-      // two-action round instead of hanging or leaking anything.
-      def pollMetric(): Option[Long] = {
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        var m = ccMetrics.remove(obsName)
-        while (m == null && System.nanoTime() < deadline) {
-          Thread.sleep(10)
-          m = ccMetrics.remove(obsName)
-        }
-        Option(m).map(_.longValue())
-      }
-      val loweredCount =
-        if (observeBroken) next.filter(col("comp") < col("old")).count()
-        else pollMetric().getOrElse {
-          observeBroken = true
-          ccMetrics.remove(obsName)
-          next.filter(col("comp") < col("old")).count()
-        }
+      // the eager checkpoint IS the round's one action; the count of
+      // still-lowering nodes is observed during it
+      val (next, loweredCount) =
+        rounds.checkpoint(jumped, col("comp") < col("old"))
       converged = loweredCount == 0L
       labels = resetLeafStats(next, nodeCount, 56).select("id", "comp")
       iter += 1
@@ -771,10 +738,8 @@ object Components {
     // bound for the shrinking frame's leaf stats (sane, not exact)
     val triRows = tri.count()
     tri = resetLeafStats(tri, triRows, 64)
-    if (sys.env.contains("GRAFT_TRUSS_DEBUG"))
-      System.err.println(f"[kTruss] enumerate: " +
-        f"${(System.nanoTime() - te0) / 1e9}%.1fs, $triRows triangles, " +
-        s"$edgeRows edges")
+    log.debug(f"kTruss enumerate: ${(System.nanoTime() - te0) / 1e9}%.1fs, " +
+      s"$triRows triangles, $edgeRows edges")
     var prevCount = edgeRows
     var converged = false
     var iter = 0
@@ -800,7 +765,7 @@ object Components {
     //
     //  1. The survivor count rides the scored checkpoint as an
     //     OBSERVED metric (the [[connectedComponentsWithStats]]
-    //     discipline, same listener/deadline/fallback machinery) —
+    //     discipline, the same [[RoundCounter]]) —
     //     the explicit per-round count() job disappears.
     //  2. The removal frame is (prevCount − n) two-long rows — known
     //     small from that metric — so it is broadcast explicitly and
@@ -834,40 +799,14 @@ object Components {
     // vs ~50 s pure-distributed at sf1).
     val broadcastMaxRemoved = 1L << 21
     val triChkEvery = 4
-    val debugTimes = sys.env.contains("GRAFT_TRUSS_DEBUG")
-    ensureTrussListener(sp)
-    // below the observe threshold the count of a checkpointed
-    // three-long frame is tens of ms — cheaper than waiting out
-    // async listener delivery (the CC measurement)
-    var observeBroken = edgeRows < observeMinEdges
-    def pollTruss(obsName: String): Option[Long] = {
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      var m = trussMetrics.remove(obsName)
-      while (m == null && System.nanoTime() < deadline) {
-        Thread.sleep(10)
-        m = trussMetrics.remove(obsName)
-      }
-      Option(m).map(_.longValue())
-    }
+    val rounds = new RoundCounter("kTruss")
     /** Checkpoint a maintained-support frame; returns it re-leafed
-      * plus a thunk yielding its ≥ k−2 survivor count — observed
-      * during the checkpoint pass when the metric path is healthy,
-      * an explicit count of the checkpoint otherwise. */
-    def checkpointScored(df: DataFrame, rows: Long): (DataFrame, () => Long) =
-      if (observeBroken) {
-        val chk = resetLeafStats(df.localCheckpoint(), rows, 56)
-        (chk, () => chk.filter(col("sup") >= lit(k - 2).cast("long")).count())
-      } else {
-        val obsName = s"graft_truss_next_${trussObsId.incrementAndGet()}"
-        val chk = resetLeafStats(
-          df.observe(obsName,
-            count(when(col("sup") >= lit(k - 2).cast("long"), 1)).as("nxt"))
-            .localCheckpoint(), rows, 56)
-        (chk, () => pollTruss(obsName).getOrElse {
-          observeBroken = true
-          chk.filter(col("sup") >= lit(k - 2).cast("long")).count()
-        })
-      }
+      * plus its ≥ k−2 survivor count. */
+    def checkpointScored(df: DataFrame, rows: Long): (DataFrame, Long) = {
+      val (chk, survivors) =
+        rounds.checkpoint(df, col("sup") >= lit(k - 2).cast("long"))
+      (resetLeafStats(chk, rows, 56), survivors)
+    }
     var (scored, nextCount) = checkpointScored(
       cur.join(supportFromTri(tri), Seq("a", "b"), "left")
         .select(col("a"), col("b"),
@@ -875,7 +814,7 @@ object Components {
     var sinceTriChk = 0
     while (!converged && iter < maxIter) {
       val tr0 = System.nanoTime()
-      val n = nextCount()
+      val n = nextCount
       converged = n == prevCount
       val removedCount = prevCount - n
       prevCount = n
@@ -927,10 +866,8 @@ object Components {
               (col("sup") - coalesce(col("dead"), lit(0L))).as("sup")), n)
         scored = sc._1
         nextCount = sc._2
-        if (debugTimes)
-          System.err.println(f"[kTruss] round $iter: " +
-            f"${(System.nanoTime() - tr0) / 1e9}%.1fs n=$n " +
-            s"removed=$removedCount chk=${sinceTriChk == 0}")
+        log.debug(f"kTruss round $iter: ${(System.nanoTime() - tr0) / 1e9}%.1fs " +
+          s"n=$n removed=$removedCount chk=${sinceTriChk == 0}")
       }
       iter += 1
     }

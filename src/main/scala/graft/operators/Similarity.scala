@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -590,26 +592,6 @@ object Similarity {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  // Skew-cap observability without a dedicated driver job: the bucket
-  // histogram is observed IN the production query (CollectMetrics adds
-  // no shuffle and no extra action — the round-7 bench showed the old
-  // eager `head()` accounting nearly doubled the operator's wall time
-  // at small SF, one whole sequential job of pure overhead), and a
-  // once-per-session listener ([[MetricListener]]) logs any dropped
-  // buckets when the query that consumed the pairs completes.
-  // Observation names must be unique per query, hence the counter.
-  private val skewObsId = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private[graft] def ensureSkewListener(spark: org.apache.spark.sql.SparkSession): Unit =
-    MetricListener.ensure(spark, "graft_neardup_skew") { (_, row) =>
-      val buckets = row.getAs[Long]("dropped_buckets")
-      if (buckets > 0)
-        log.warn(s"nearDupPairs: dropped $buckets oversized buckets " +
-          s"(${row.getAs[Long]("dropped_band_rows")} band-rows, " +
-          s"cap=${row.getAs[Long]("cap")}) — pairs within them are " +
-          "NOT examined; raise maxBucket or bands to recover them")
-    }
-
   /** Embedding near-dup pairs above a cosine threshold. Banded
     * hyperplane LSH: `bands` bands, each `bitsPerBand` bits drawn
     * from a shared pool of `numBits` sign bits; bucket-join per band,
@@ -627,14 +609,10 @@ object Similarity {
     * buckets — with every dropped bucket COUNTED AND LOGGED, never
     * silent. Pass explicit values to pin any of them.
     *
-    * `skewWarn = true` (default) observes the bucket histogram inside
-    * the production query itself (`Dataset.observe` on a zero-row
-    * union branch — no extra job, no extra shuffle; see the in-code
-    * note on why the branch placement matters under AQE) and a
-    * session-level listener logs a warning with the dropped-bucket
-    * count when the consuming action completes. `false` drops the
-    * metric branch and the warning (for callers auditing the caps
-    * themselves).
+    * The dropped-bucket count is observed (a Spark `Observation`) in
+    * the one action that fills the band table and its histogram, so
+    * it costs no extra job and does not depend on what the caller
+    * does with the result; a call that drops buckets logs one warning.
     *
     * The three internal caches (vectors, the bucket-partitioned band
     * table, bucket histogram) follow the [[Caches]] lifecycle. */
@@ -668,8 +646,7 @@ object Similarity {
                    threshold: Double, dim: Int = 64, numBits: Int = 0,
                    bands: Int = 16, bitsPerBand: Int = 0,
                    seed: Long = 7L, maxBucket: Int = 0,
-                   targetBucket: Int = 32,
-                   skewWarn: Boolean = true): DataFrame = Caches.scoped { caches =>
+                   targetBucket: Int = 32): DataFrame = Caches.scoped { caches =>
     graft.functions.DotProduct.register(emb.sparkSession)
     // Pool size depends on n, and n needs a count — so persist the raw
     // (id, vec) projection FIRST and count THAT: the input is scanned
@@ -707,20 +684,45 @@ object Similarity {
     // InMemoryRelation's AdaptiveSparkPlan defeats exchange-reuse
     // canonicalization. Persisting the repartitioned frame keeps its
     // hash partitioning visible to the planner, so the aggregate and
-    // both joins below plan with NO further exchange; the count fills
-    // base + chunks in one pass (no cache-fill races). Partition count
-    // pinned at defaultParallelism — the self-join amplifies band rows
-    // into candidate pairs, so AQE byte-based coalescing would
-    // under-parallelize the probe stage.
-    val chunks = caches.fill(withBits
+    // both joins below plan with NO further exchange; one count below
+    // fills chunks and sizes in one pass (no cache-fill races).
+    // Partition count pinned at defaultParallelism — the self-join
+    // amplifies band rows into candidate pairs, so AQE byte-based
+    // coalescing would under-parallelize the probe stage.
+    val chunks = caches.persist(withBits
       .select(col("id"), explode(array(bandStructs: _*)).as("bs"))
       .select(col("id"), col("bs.band"), col("bs.sig"))
       .repartition(emb.sparkSession.sparkContext.defaultParallelism,
         col("band"), col("sig")))
     // bucket histogram: aggregates the cache in place (co-partitioned,
-    // no exchange); persisted because it feeds the prune join AND the
-    // skew-accounting observe branch below
+    // no exchange)
     val sizes = caches.persist(chunks.groupBy("band", "sig").count())
+    // Skew-cap accounting: dropping a bucket drops its pairs from the
+    // output, so it is counted and logged, never silent. One count of
+    // the observed histogram fills chunks and sizes together, and the
+    // skew count is observed in that same pass — the action the band
+    // table's fill needs anyway, so the accounting costs no job. Its
+    // Observation sits at the top of its own action, outside the
+    // result's plan: no consumer filter or empty-relation rewrite of
+    // the result can prune it.
+    val skew = Observation(s"graft_neardup_skew_${java.util.UUID.randomUUID}")
+    sizes.observe(skew,
+      coalesce(sum(when(col("count") > maxB, col("count"))), lit(0L))
+        .as("dropped_band_rows"),
+      count(when(col("count") > maxB, lit(1))).as("dropped_buckets"),
+      coalesce(max(lit(maxB.toLong)), lit(maxB.toLong)).as("cap")).count()
+    try {
+      val row = Await.result(skew.future, Components.observeDeadline)
+      val buckets = row.getAs[Long]("dropped_buckets")
+      if (buckets > 0)
+        log.warn(s"nearDupPairs: dropped $buckets oversized buckets " +
+          s"(${row.getAs[Long]("dropped_band_rows")} band-rows, cap=$maxB) — " +
+          "pairs within them are NOT examined; raise maxBucket or bands to recover them")
+    } catch {
+      case _: TimeoutException =>
+        log.warn("nearDupPairs: the skew-cap count was not delivered; " +
+          "buckets over the cap may have been dropped unreported")
+    }
     // MERGE hints: both joins read the (band, sig)-partitioned cache,
     // so sort-merge joins them with no exchange and no per-task
     // broadcast build (the planner's size estimate would broadcast the
@@ -732,7 +734,7 @@ object Similarity {
     val lhs = pruned.alias("l").hint("merge")
     val rhs = pruned.alias("r")
     val vecs = base.select(col("id"), col("v"))
-    val result = lhs
+    lhs
       .join(rhs, col("l.band") === col("r.band") && col("l.sig") === col("r.sig") &&
               col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
@@ -742,35 +744,6 @@ object Similarity {
       .withColumn("cos", expr("graft_dot(va, vb)"))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
-    // Skew-cap accounting: dropping a bucket drops its pairs from the
-    // output — that must be visible, not silent. The metric CANNOT
-    // ride the prune path: when every bucket is over cap the candidate
-    // join is empty, AQE's empty-relation propagation replaces that
-    // whole branch (CollectMetrics included) with an EmptyRelation,
-    // and the warning vanishes in exactly the worst-skew case (found
-    // by the SimilaritySpec metric pin). Instead the observation sits
-    // on a zero-row branch UNIONED onto the result: the filter below
-    // never passes (histogram counts are ≥ 1, but that is opaque to
-    // the optimizer, so it cannot be constant-folded away), there is
-    // no exchange between the cached-histogram scan and the union, so
-    // the branch lives in the final stage where AQE never propagates
-    // emptiness — the metric fires on every consuming action, once
-    // (the node appears exactly once in the plan). Cost: one extra
-    // scan of the CACHED bucket histogram + a partial agg, no shuffle.
-    if (!skewWarn) result
-    else {
-      ensureSkewListener(emb.sparkSession)
-      val observed = sizes.observe(s"graft_neardup_skew_${skewObsId.incrementAndGet()}",
-        coalesce(sum(when(col("count") > maxB, col("count"))), lit(0L))
-          .as("dropped_band_rows"),
-        count(when(col("count") > maxB, lit(1))).as("dropped_buckets"),
-        coalesce(max(lit(maxB.toLong)), lit(maxB.toLong)).as("cap"))
-      // zero-row twin, not null literals: a null-literal branch would
-      // mark every output column nullable (round-9 ADVICE), changing the
-      // result schema between code paths
-      result.unionByName(MetricListener.zeroRowTwin(
-        observed, col("count") < 0, result.schema))
-    }
   }
 
   /** Symmetric per-vector int8 quantization: scale = max |v_i|,

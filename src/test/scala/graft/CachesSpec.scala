@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -118,5 +120,20 @@ class CachesSpec extends AnyFunSuite {
       Thread.sleep(1000) // a wrongly registered release lands well inside this
       assert(mine.storageLevel === StorageLevel.MEMORY_AND_DISK)
     } finally mine.unpersist()
+  }
+
+  test("Caches is the only QueryExecutionListener registration in src/main") {
+    // observed metrics go through Spark's Observation; a second
+    // hand-rolled listener bus would show up here
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root))
+    val files = Files.walk(root)
+    val sources =
+      try files.iterator.asScala.filter(Files.isRegularFile(_)).toList
+      finally files.close()
+    val registering = sources
+      .filter(p => Files.readString(p).contains("listenerManager.register"))
+      .map(p => root.relativize(p).toString.replace('\\', '/'))
+    assert(registering === List("graft/operators/Caches.scala"))
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.{Components, Dedup, TextAnalysis}
 
 /** Connected-components kernel pinned against a union-find reference,
@@ -524,6 +528,60 @@ class ComponentsSpec extends AnyFunSuite {
     val noisy = edges ++ edges.map(_.swap)
     assert(ktrussOf(noisy, 4, Long.MaxValue) === refKTruss(edges, 4))
     assert(ktrussOf(noisy, 4, 0L) === refKTruss(edges, 4))
+  }
+
+  /** The `funcName` of every action `body` runs. Query listeners are
+    * called in submission order, so once a trailing marker query is
+    * seen, every action of `body` has been. */
+  private def actionsOf(body: => Unit): Seq[String] = {
+    val names = new ConcurrentLinkedQueue[String]()
+    val marker = s"graft_actions_marker_${java.util.UUID.randomUUID}"
+    val markerSeen = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.observedMetrics.contains(marker)) markerSeen.countDown()
+        else names.add(f)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = names.add(f)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).observe(marker, count(lit(1)).as("n")).collect()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker query never seen")
+      names.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("convergence adds no per-round action: count actions do not grow with rounds") {
+    val s = spark
+    import s.implicits._
+    def chain(nodes: Long) =
+      (1L until nodes).map(i => (i, i + 1)).toDF("src", "dst")
+    var (shortRounds, longRounds) = (0, 0)
+    val short = actionsOf {
+      shortRounds = Components.connectedComponentsWithStats(chain(3),
+        localSolveMaxEdges = 0L).iterations
+    }
+    val long = actionsOf {
+      longRounds = Components.connectedComponentsWithStats(chain(65),
+        localSolveMaxEdges = 0L).iterations
+    }
+    assert(longRounds > shortRounds, s"rounds $shortRounds vs $longRounds")
+    assert(long.count(_ == "count") === short.count(_ == "count"),
+      s"connectedComponents: $short vs $long")
+    // kTruss: K4 converges in its first round; the seeded fuzz graph
+    // peels over several rounds at k = 4
+    val k4 = for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)
+    val rnd = new scala.util.Random(1357)
+    val fuzz = Seq.fill(600)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
+      .filter(e => e._1 != e._2)
+    val one = actionsOf { ktrussOf(k4, 4, 0L) }
+    val several = actionsOf { ktrussOf(fuzz, 4, 0L) }
+    assert(several.count(_ == "localCheckpoint") > one.count(_ == "localCheckpoint") + 2,
+      s"the fuzz graph must peel over several rounds: $one vs $several")
+    assert(several.count(_ == "count") === one.count(_ == "count"),
+      s"kTruss: $one vs $several")
   }
 
   test("degreeHistogram and triangleCount on known graphs") {

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import graft.functions.DotProduct
 
 /** The native codegen'd dot product must be bit-identical to the
@@ -13,6 +14,18 @@ class DotProductSpec extends AnyFunSuite {
 
   private def hof(a: String, b: String) =
     expr(s"aggregate(zip_with($a, $b, (x, y) -> cast(x as double) * cast(y as double)), 0D, (acc, v) -> acc + v)")
+
+  test("a second register leaves the registry's graft_dot entry as it is") {
+    // each registration stores a fresh ExpressionInfo, so identity
+    // tells a kept entry from a replaced one
+    val registry = spark.sessionState.functionRegistry
+    DotProduct.register(spark)
+    val first = registry.lookupFunction(FunctionIdentifier("graft_dot"))
+    DotProduct.register(spark)
+    val second = registry.lookupFunction(FunctionIdentifier("graft_dot"))
+    assert(first.isDefined)
+    assert(second.get eq first.get, "register replaced an existing graft_dot")
+  }
 
   test("native graft_dot equals the HOF formulation bit-for-bit on real vectors") {
     DotProduct.register(spark)

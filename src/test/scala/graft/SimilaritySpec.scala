@@ -76,6 +76,21 @@ class SimilaritySpec extends AnyFunSuite {
         s"dropped_buckets: ${rows.head}")
       assert(rows.head.getAs[Long]("dropped_band_rows") === 200L,
         s"dropped_band_rows: ${rows.head}")
+      // a consumer filter on the result's columns must not lose the
+      // metric: it is delivered once, with the same counts
+      seen.clear()
+      val kept = Similarity.nearDupPairs(df, "vec_id", "embedding", 0.9,
+        bands = 4, bitsPerBand = 8, maxBucket = 10)
+        .filter(col("id_a") =!= col("id_b")).count()
+      assert(kept === 0L)
+      val deadline2 = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.isEmpty && System.nanoTime() < deadline2) Thread.sleep(50)
+      Thread.sleep(500)
+      val filtered = seen.asScala.toList
+      assert(filtered.size === 1,
+        s"skew metric under a consumer filter fired ${filtered.size} times: $filtered")
+      assert(filtered.head.getAs[Long]("dropped_buckets") === 4L)
+      assert(filtered.head.getAs[Long]("dropped_band_rows") === 200L)
     } finally spark.listenerManager.unregister(listener)
     spark.catalog.clearCache()
   }
