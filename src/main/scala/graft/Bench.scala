@@ -119,6 +119,10 @@ object Bench {
     }
     recordCanary(0, canaryStart)
     val ordered = SparkEntry.benchQueries.toSeq.sortBy(_._1)
+    // cached relations each query's first run left behind (operator
+    // caches are released on the listener bus, so this polls up to 2 s);
+    // only non-zero counts are kept. The clearCache below would hide them.
+    val cacheResidue = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val results: Seq[(String, Seq[Double])] =
       ordered.zipWithIndex.map { case ((name, fn), qi) =>
         if (qi > 0 && qi % canaryEveryN == 0) {
@@ -136,9 +140,11 @@ object Bench {
             errors ::= name
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
           }
-          // LSH queries persist their signature frames; drop them so
-          // one run's cache can't crowd out the next (and repeat runs
-          // re-pay the persist instead of timing a cache read)
+          if (i == 0) {
+            val resident = graft.operators.Caches.residentAfter(spark, 2000)
+            if (resident > 0) cacheResidue(name) = resident
+          }
+          // a repeat run re-pays any cache instead of timing a cache read
           spark.catalog.clearCache()
           i += 1
         }
@@ -244,6 +250,8 @@ object Bench {
         ",\"rerun\":" + rr.map(fmt).mkString("[", ",", "]") +
         ",\"healed\":" + healed + "}"
     }.mkString("{", ",", "}")
+    val residueJson = cacheResidue.map { case (k, n) => "\"" + k + "\":" + n }
+      .mkString("{", ",", "}")
     val errJson = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = medians.collect { case (_, v) if v >= 0 => v }.sum
     // end canary AFTER the loop, BEFORE the bookkeeping below, so it
@@ -307,7 +315,7 @@ object Bench {
     // errors → canary → mem) go last — the tail then carries the end
     // of queries_norm plus every summary field instead of cutting
     // mid-`runs` (r15 verdict #5). JSON consumers are order-blind.
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","runs":$runsJson,"queries":$qs,"queries_min":$qsMin,"queries_norm":$qsNorm,"requeued":$requeuedJson,"errors":$errJson,"canary":$canary,"mem":$mem}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","runs":$runsJson,"queries":$qs,"queries_min":$qsMin,"cache_residue":$residueJson,"queries_norm":$qsNorm,"requeued":$requeuedJson,"errors":$errJson,"canary":$canary,"mem":$mem}"""
     println(line)
     // the driver stores only a truncated stdout tail (round 12 lost
     // queries_norm — the field regression flags are computed from), so

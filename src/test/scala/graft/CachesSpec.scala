@@ -136,4 +136,25 @@ class CachesSpec extends AnyFunSuite {
       .map(p => root.relativize(p).toString.replace('\\', '/'))
     assert(registering === List("graft/operators/Caches.scala"))
   }
+
+  test("operators persist outside Caches.scoped only at the named sites") {
+    // an operator's own caches go through `caches.persist`/`fill`; the
+    // sites below hold a cache whose release is owned elsewhere
+    val allowed = Map(
+      "graft/operators/Caches.scala" -> 1, // Scope.own: the scoped persist itself
+      "graft/operators/Dedup.scala" -> 2, // bundle: its caller calls DedupBundle.release
+      "graft/operators/Similarity.scala" -> 2) // kMeans, pqFit: unpersisted in finally
+    val root = Paths.get("src/main/scala")
+    val ops = root.resolve("graft/operators")
+    assert(Files.isDirectory(ops))
+    val handManaged = """(?<!caches)\.persist\(""".r
+    val files = Files.walk(ops)
+    val found =
+      try files.iterator.asScala.filter(Files.isRegularFile(_)).toList
+        .map(p => root.relativize(p).toString.replace('\\', '/') ->
+          handManaged.findAllIn(Files.readString(p)).size)
+        .filter(_._2 > 0).toMap
+      finally files.close()
+    assert(found === allowed)
+  }
 }

@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheBridge
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.operators.{Components, Dedup, TextAnalysis}
+import graft.operators.{Caches, Components, Dedup, TextAnalysis}
 
 /** Connected-components kernel pinned against a union-find reference,
   * plus the transitive-dedup application semantics. */
@@ -582,6 +583,48 @@ class ComponentsSpec extends AnyFunSuite {
       s"the fuzz graph must peel over several rounds: $one vs $several")
     assert(several.count(_ == "count") === one.count(_ == "count"),
       s"kTruss: $one vs $several")
+    // kCore at k = 2: a triangle settles in its first round; the 8-chain
+    // peels one endpoint pair per round over four
+    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L))
+    val chain8 = (1L to 7L).map(i => (i, i + 1))
+    val settled = actionsOf { kcoreOf(tri, 2, 0L) }
+    val peeled = actionsOf { kcoreOf(chain8, 2, 0L) }
+    assert(peeled.count(_ == "localCheckpoint") > settled.count(_ == "localCheckpoint") + 2,
+      s"the chain must peel over several rounds: $settled vs $peeled")
+    assert(peeled.count(_ == "count") === settled.count(_ == "count"),
+      s"kCore: $settled vs $peeled")
+  }
+
+  test("a kernel whose input fails to evaluate leaves no cached relation behind") {
+    // a range, not a local relation, so the failing row raises in a
+    // task rather than while the optimizer folds the input
+    def failing(a: String, b: String) = spark.range(1, 4)
+      .select(col("id").as(a),
+        when(col("id") === 3L, raise_error(lit("failing edge")))
+          .otherwise(col("id") + 1).as(b),
+        lit(1L).as("w"))
+    val kernels = Seq[(String, Long => Any)](
+      "connectedComponents" -> (m => Components.connectedComponentsWithStats(
+        failing("src", "dst"), localSolveMaxEdges = m).labels.collect()),
+      "kCore" -> (m => Components.kCore(failing("doc_a", "doc_b"), 2,
+        localSolveMaxEdges = m).collect()),
+      "kTruss" -> (m => Components.kTruss(failing("doc_a", "doc_b"), 3,
+        localSolveMaxEdges = m).collect()),
+      "pageRank" -> (m => Components.pageRank(failing("doc_a", "doc_b"),
+        localSolveMaxEdges = m).collect()),
+      "pageRankWeighted" -> (m => Components.pageRankWeighted(
+        failing("doc_a", "doc_b"), "w", localSolveMaxEdges = m).collect()))
+    for ((name, run) <- kernels;
+         m <- Seq(0L, Components.defaultLocalSolveMaxEdges)) {
+      // earlier tests' releases land on the listener bus; let them
+      val before = Caches.residentAfter(spark, 2000)
+      val ex = intercept[Exception](run(m))
+      assert(ex.toString.contains("failing edge") ||
+        Option(ex.getCause).exists(_.toString.contains("failing edge")),
+        s"$name at localSolveMaxEdges=$m failed for another reason: $ex")
+      assert(CacheBridge.cachedCount(spark) === before,
+        s"$name at localSolveMaxEdges=$m left a cached relation")
+    }
   }
 
   test("degreeHistogram and triangleCount on known graphs") {
