@@ -48,13 +48,13 @@ final case class CatalogEntry(name: String, path: String, format: String,
   *
   * The manifest is persisted as TSV (name, format, path,
   * comma-joined hosts, retired-prior-path, URL-encoded options,
-  * per-partition file/byte stats, URL-encoded JSON read schema) so a
-  * new session can re-open the catalog — including the reader options
-  * a text-format entry needs to come back losslessly, the partition
-  * bookkeeping that keeps [[fileStats]]/[[compactPartitioned]]
-  * planning off the FS, and the recorded schema that keeps [[get]]
-  * from running an inference job. Rows from older layouts, with
-  * fewer columns, load with the missing fields empty.
+  * URL-encoded JSON read schema) so a new session can re-open the
+  * catalog — including the reader options a text-format entry needs
+  * to come back losslessly, and the recorded schema that keeps [[get]]
+  * from running an inference job. Rows from older layouts load with
+  * the missing fields empty; a layout that carried per-partition file
+  * stats between the options and the schema loads its schema from
+  * the row's last column (see [[loadManifest]]).
   *
   * Every write passes Hadoop options that put its `file:` paths on
   * [[NioLocalFileSystem]] ([[Catalog.writer]]). Without libhadoop,
@@ -100,16 +100,6 @@ final class Catalog(spark: SparkSession, root: String,
   // see [[writeVersioned]]); persisted as the manifest's 5th column so
   // a reopened catalog keeps GC'ing it instead of leaking it forever
   private val retired = TrieMap.empty[String, String]
-  // name → per-partition-directory (data files, data bytes) of the
-  // entry's CURRENT version — the manifest-persisted bookkeeping that
-  // makes [[fileStats]] and [[compactPartitioned]]'s planning O(manifest
-  // read) instead of an O(partition dirs) driver FS walk per call.
-  // Maintained by every mutation that touches a partitioned layout
-  // ([[putPartitioned]] seeds it, [[appendPartitioned]] refreshes only
-  // the touched partitions, [[compactPartitioned]] carries linked
-  // partitions' rows forward and re-walks only the rewritten ones);
-  // absent for flat / legacy entries, which fall back to the walk.
-  private val partStats = TrieMap.empty[String, Map[String, (Long, Long)]]
   private val rootPath: Path = Paths.get(root)
   private val manifest: Path = rootPath.resolve("_catalog.tsv")
   private val lockFile: Path = rootPath.resolve(Catalog.WriterLockFile)
@@ -243,10 +233,6 @@ final class Catalog(spark: SparkSession, root: String,
       scala.util.Try(deleteRecursively(target))
       throw e
     }
-    // whatever partition bookkeeping described the displaced version is
-    // stale the moment the pointer swaps; partitioned writers re-seed
-    // it for the fresh version after this returns
-    partStats.remove(name)
     val previous = entries.get(name)
     val e = CatalogEntry(name, target.toString, format, placeReplicas(name),
       options, schema)
@@ -274,22 +260,14 @@ final class Catalog(spark: SparkSession, root: String,
   def putPartitioned(name: String, df: DataFrame, partitionCol: String,
                      format: String = "parquet",
                      options: Map[String, String] = Map.empty): CatalogEntry =
-    synchronized {
-      // the partition column rides the entry (manifest-persisted, under
-      // a reserved graft.* key Spark sources ignore) so appendPartitioned
-      // and compactPartitioned can VALIDATE against it instead of
-      // trusting the caller to remember the layout
-      val e = writeVersioned(name, format,
-        options + (Catalog.PartitionColKey -> partitionCol)) { dir =>
-        Catalog.writer(df).format(format).options(options).partitionBy(partitionCol)
-          .mode(SaveMode.Overwrite).save(dir)
-      }
-      // seed the manifest's per-partition bookkeeping from the dirs
-      // just written — the ONE full walk in the layout's lifetime;
-      // appends and compactions maintain it incrementally from here
-      partStats.put(name, walkPartStats(Paths.get(e.path), partitionCol))
-      saveManifest()
-      e
+    // the partition column rides the entry (manifest-persisted, under
+    // a reserved graft.* key Spark sources ignore) so appendPartitioned
+    // and compactPartitioned can VALIDATE against it instead of
+    // trusting the caller to remember the layout
+    writeVersioned(name, format,
+      options + (Catalog.PartitionColKey -> partitionCol)) { dir =>
+      Catalog.writer(df).format(format).options(options).partitionBy(partitionCol)
+        .mode(SaveMode.Overwrite).save(dir)
     }
 
   /** Append rows into the CURRENT version of a partitioned entry —
@@ -342,43 +320,6 @@ final class Catalog(spark: SparkSession, root: String,
       }
       Catalog.writer(df).format(e.format).options(e.options ++ options)
         .partitionBy(partitionCol).mode(SaveMode.Append).save(e.path)
-      // refresh the manifest's per-partition bookkeeping for ONLY the
-      // partitions this append touched (their values come off the
-      // appended frame — bounded by the slice's partition count, the
-      // same class as compaction's fragmented-values list), so
-      // maintenance bookkeeping scales with the day's appends, not the
-      // table. Dir names are matched by UNESCAPING (never re-escaping,
-      // so no escape round-trip to get wrong); a touched value whose
-      // rendering matches no dir (exotic type formatting) falls back to
-      // one full re-seed walk rather than leaving stats silently stale.
-      val root = Paths.get(e.path)
-      val touched = df.select(col(partitionCol).cast("string")).distinct()
-        .collect()
-        .map(r => Option(r.getString(0)).getOrElse(Catalog.NullPartitionDir))
-        .toSet
-      partStats.get(name) match {
-        case Some(cur) =>
-          val dirs = {
-            val st = Files.list(root)
-            try st.iterator().asScala
-              .filter(p => Files.isDirectory(p) &&
-                p.getFileName.toString.startsWith(s"$partitionCol="))
-              .map(_.getFileName.toString).toSeq
-            finally st.close()
-          }
-          val byValue = dirs.map(d => Catalog.unescapePathName(
-            d.drop(partitionCol.length + 1)) -> d).toMap
-          if (touched.forall(byValue.contains)) {
-            val upd = touched.toSeq.map(byValue).map { d =>
-              val fs = Catalog.dataFiles(root.resolve(d))
-              d -> (fs.size.toLong, fs.map(Files.size(_)).sum)
-            }
-            partStats.put(name, cur ++ upd)
-          } else partStats.put(name, walkPartStats(root, partitionCol))
-        case None =>
-          partStats.put(name, walkPartStats(root, partitionCol))
-      }
-      saveManifest()
       e
     }
 
@@ -387,24 +328,13 @@ final class Catalog(spark: SparkSession, root: String,
     * count of an entry's CURRENT version — the number a maintenance
     * loop watches to decide when [[compactPartitioned]] is due
     * (every [[appendPartitioned]] adds files forever; scan planning
-    * cost is governed by file COUNT). Partitioned entries are served
-    * from the manifest's per-partition bookkeeping (O(manifest) — no
-    * FS touched; CatalogSpec pins manifest == walk after every
-    * mutation); flat and legacy entries fall back to the driver-side
-    * FS metadata walk, same class of work as Spark's own file-listing
-    * at planning. */
+    * cost is governed by file COUNT). One driver-side FS metadata
+    * walk of the version dir per call — the same class of work as the
+    * file listing Spark's file index does when a read of the entry is
+    * created. */
   def fileStats(name: String): Catalog.FileStats = {
     val e = entries.getOrElse(name,
       throw new NoSuchElementException(s"no such dataset: $name"))
-    partStats.get(name) match {
-      case Some(m) =>
-        Catalog.FileStats(m.valuesIterator.map(_._1).sum,
-          m.valuesIterator.map(_._2).sum, m.size)
-      case None => fileStatsWalk(e)
-    }
-  }
-
-  private def fileStatsWalk(e: CatalogEntry): Catalog.FileStats = {
     val root = Paths.get(e.path)
     if (!Files.exists(root)) Catalog.FileStats(0L, 0L, 0)
     else {
@@ -428,17 +358,9 @@ final class Catalog(spark: SparkSession, root: String,
     }
   }
 
-  /** The manifest-recorded per-partition-directory (data files, data
-    * bytes) of a partitioned entry's CURRENT version — the bookkeeping
-    * [[fileStats]] and [[compactPartitioned]]'s planning read instead
-    * of walking the FS. None for flat layouts and entries written
-    * before the bookkeeping existed (those fall back to the walk). */
-  def partitionStats(name: String): Option[Map[String, (Long, Long)]] =
-    partStats.get(name)
-
   /** One first-level walk of a version dir: dirName → (data files,
-    * data bytes) per `partitionCol=` partition directory — the seeding
-    * (and legacy-entry fallback) source of [[partitionStats]]. */
+    * data bytes) per `partitionCol=` partition directory — what
+    * [[compactPartitioned]] plans from. */
   private def walkPartStats(versionDir: Path,
                             partitionCol: String): Map[String, (Long, Long)] =
     if (!Files.exists(versionDir)) Map.empty
@@ -497,17 +419,16 @@ final class Catalog(spark: SparkSession, root: String,
     // Spark rewrite below reads ONLY the fragmented partitions (a
     // STATIC `isin` over the driver-known fragmented values —
     // unconditional planning-time PartitionFilters, pinned in
-    // CatalogSpec). Planning reads the manifest's per-partition
-    // bookkeeping when present — no FS walk; legacy entries walk once
-    // and are seeded from here on.
+    // CatalogSpec). Planning takes the per-partition sizes from one
+    // first-level walk of the version dir.
     final case class PartDir(dirName: String, value: String, bytes: Long,
                              files: Long, target: Int)
-    val stats = partStats.getOrElse(name, walkPartStats(root, partitionCol))
-    val parts: Seq[PartDir] = stats.toSeq.map { case (dirName, (files, bytes)) =>
-      val target = ((bytes + targetFileBytes - 1) / targetFileBytes)
-        .max(1).min(1 << 16).toInt
-      PartDir(dirName, Catalog.unescapePathName(
-        dirName.drop(partitionCol.length + 1)), bytes, files, target)
+    val parts: Seq[PartDir] = walkPartStats(root, partitionCol).toSeq.map {
+      case (dirName, (files, bytes)) =>
+        val target = ((bytes + targetFileBytes - 1) / targetFileBytes)
+          .max(1).min(1 << 16).toInt
+        PartDir(dirName, Catalog.unescapePathName(
+          dirName.drop(partitionCol.length + 1)), bytes, files, target)
     }
     // the null-partition dir cannot be value-matched (its rows read
     // back as NULL, the dir name is Spark's escape sentinel), so it is
@@ -523,7 +444,7 @@ final class Catalog(spark: SparkSession, root: String,
     // pages read). Only needed when something is actually rewritten:
     // an all-links compact moves bytes verbatim.
     val oldCount = if (frag.nonEmpty) df.count() else 0L
-    val out = writeVersioned(name, e.format, e.options) { dir =>
+    writeVersioned(name, e.format, e.options) { dir =>
       if (frag.nonEmpty)
         Catalog.writer(compacted).format(e.format).options(e.options)
           .partitionBy(partitionCol).mode(SaveMode.Overwrite).save(dir)
@@ -560,26 +481,6 @@ final class Catalog(spark: SparkSession, root: String,
               "inference?); compact aborted, store untouched")
       }
     }
-    // fresh version's bookkeeping: linked partitions carry their stats
-    // verbatim (hard links — same files, same bytes); only the
-    // rewritten partition dirs are walked
-    val newRoot = Paths.get(out.path)
-    val carried = wellSized.map(p => p.dirName -> (p.files, p.bytes)).toMap
-    val rewritten = {
-      val st = Files.list(newRoot)
-      try st.iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(s"$partitionCol=") &&
-          !carried.contains(p.getFileName.toString))
-        .map { p =>
-          val fs = Catalog.dataFiles(p)
-          p.getFileName.toString -> (fs.size.toLong, fs.map(Files.size(_)).sum)
-        }.toMap
-      finally st.close()
-    }
-    partStats.put(name, carried ++ rewritten)
-    saveManifest()
-    out
   }
 
   /** `put` with output files sized for the NEXT reader: repartitions
@@ -769,7 +670,6 @@ final class Catalog(spark: SparkSession, root: String,
           if (p.normalize().startsWith(rootPath.normalize()))
             deleteRecursively(p)
         }
-        partStats.remove(name)
         saveManifest()
         true
       case None => false
@@ -823,11 +723,11 @@ final class Catalog(spark: SparkSession, root: String,
     Catalog.deleteRecursively(p)
 
   /** Manifest row: name, format, path, replicas, retired-prior-path
-    * ('' when none), options, partition stats, read schema ('' when
-    * none). Written to a temp file then ATOMIC_MOVE'd into place: a
-    * concurrent [[loadManifest]] from another Catalog instance over
-    * the same root sees the old manifest or the new one, never a
-    * truncated half-write. */
+    * ('' when none), options, read schema ('' when none). Written to
+    * a temp file then ATOMIC_MOVE'd into place: a concurrent
+    * [[loadManifest]] from another Catalog instance over the same
+    * root sees the old manifest or the new one, never a truncated
+    * half-write. */
   // options column: URL-encoded k=v pairs joined with ';' — encoding
   // because option VALUES can contain the manifest's own separators
   // (a csv delimiter of '\t', a nullValue of ';')
@@ -847,32 +747,10 @@ final class Catalog(spark: SparkSession, root: String,
       }
     }.toMap
 
-  // partition-stats column: URL-encoded dirName=files:bytes pairs
-  // joined with ';' (dir names can contain the separators via Spark's
-  // %-escaping of partition values — encoding makes that moot)
-  private def encodeStats(m: Map[String, (Long, Long)]): String =
-    m.toSeq.sortBy(_._1).map { case (d, (f, b)) =>
-      java.net.URLEncoder.encode(d, "UTF-8") + s"=$f:$b"
-    }.mkString(";")
-
-  private def decodeStats(s: String): Map[String, (Long, Long)] =
-    s.split(";").toSeq.filter(_.nonEmpty).flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(d, fb) => fb.split(":", 2) match {
-          case Array(f, b) =>
-            for (fl <- f.toLongOption; bl <- b.toLongOption)
-              yield java.net.URLDecoder.decode(d, "UTF-8") -> (fl, bl)
-          case _ => None
-        }
-        case _ => None
-      }
-    }.toMap
-
   private def saveManifest(): Unit = {
     val lines = entries.values.toSeq.sortBy(_.name).map { e =>
       s"${e.name}\t${e.format}\t${e.path}\t${e.replicas.mkString(",")}" +
         s"\t${retired.getOrElse(e.name, "")}\t${encodeOptions(e.options)}" +
-        s"\t${partStats.get(e.name).map(encodeStats).getOrElse("")}" +
         s"\t${e.schema.map(encodeSchema).getOrElse("")}"
     }
     val tmp = Files.createTempFile(rootPath, "_catalog", ".tmp")
@@ -895,7 +773,12 @@ final class Catalog(spark: SparkSession, root: String,
     * in-memory state for a name this instance wrote is simply
     * re-asserted by its own saveManifest; a name another instance
     * wrote appears). Shorter rows from older manifest layouts load
-    * with no retired version / no options / no recorded schema. */
+    * with no retired version / no options / no recorded schema. The
+    * schema is the row's LAST column past the options: one earlier
+    * layout put per-partition file stats between the two (eight
+    * columns), and the one before it ended on those stats (seven
+    * columns, like the current row); stats never parse as a schema,
+    * so such a row infers. */
   private def loadManifest(): Unit =
     if (Files.exists(manifest)) {
       Files.readAllLines(manifest).asScala.foreach { line =>
@@ -907,12 +790,8 @@ final class Catalog(spark: SparkSession, root: String,
             entries.put(n, CatalogEntry(n, p, f,
               r.split(",").toSeq.filter(_.nonEmpty),
               rest.headOption.map(decodeOptions).getOrElse(Map.empty),
-              rest.lift(2).filter(_.nonEmpty).flatMap(decodeSchema)))
+              rest.drop(1).lastOption.filter(_.nonEmpty).flatMap(decodeSchema)))
             if (ret.nonEmpty) retired.put(n, ret) else retired.remove(n)
-            rest.lift(1).filter(_.nonEmpty) match {
-              case Some(stats) => partStats.put(n, decodeStats(stats))
-              case None => partStats.remove(n)
-            }
           case _ => // skip malformed line
         }
       }
@@ -928,7 +807,7 @@ object Catalog {
 
   /** Spark's directory sentinel for a NULL partition value — rows in
     * it cannot be value-matched, so compaction always carries it by
-    * link and the append bookkeeping maps a null value to it. */
+    * link. */
   private[catalog] val NullPartitionDir = "__HIVE_DEFAULT_PARTITION__"
 
   /** [[Catalog.compactPartitioned]]'s rewrite frame over the
@@ -936,11 +815,11 @@ object Catalog {
     * count) per fragmented partition. The value filter is a STATIC
     * `isin` over driver-known values — it references only the
     * partition column, so planning resolves it to PartitionFilters
-    * and well-sized partitions' files are never listed, let alone
-    * read; the broadcast join then annotates each row with its
-    * partition's file target and `repartition(partitionCol, bucket)`
-    * hands the dynamic-partition writer one task per (partition,
-    * bucket). Package-private (not just local) so CatalogSpec can
+    * and well-sized partitions' files are never read (the file index
+    * still lists them when the read is created); the broadcast join
+    * then annotates each row with its partition's file target and
+    * `repartition(partitionCol, bucket)` hands the dynamic-partition
+    * writer one task per (partition, bucket). Package-private (not just local) so CatalogSpec can
     * assert the pruning on the exact production frame — a spec fails
     * if this ever scans a well-sized partition. */
   private[graft] def rewriteFrame(df: DataFrame, partitionCol: String,
@@ -1073,7 +952,9 @@ object Catalog {
 
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      val st = Files.walk(p)
+      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally st.close()
     }
 
   /** The DATA files directly under a path (regular files minus the
@@ -1095,8 +976,11 @@ object Catalog {
     * [[Catalog.measureRatio]]'s ratio). */
   private[catalog] def diskBytes(p: Path): Long =
     if (!Files.exists(p)) 0L
-    else Files.walk(p).iterator().asScala
-      .filter(Files.isRegularFile(_)).map(Files.size).sum
+    else {
+      val st = Files.walk(p)
+      try st.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+      finally st.close()
+    }
 
   /** Bound on concurrent catalog ops — library code must not
     * `Await.result(..., Duration.Inf)`; callers with genuinely longer

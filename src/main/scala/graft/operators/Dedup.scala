@@ -285,12 +285,20 @@ object Dedup {
     * `deduped` applies the greedy pairwise rule of [[dropNearDups]].
     * Caller owns release: [[DedupBundle.release]] after the last
     * action (an automatic first-action hook would be wrong here — the
-    * bundle exists precisely for multi-action consumers). */
+    * bundle exists precisely for multi-action consumers). If the
+    * clustering throws (its edge checkpoint evaluates `pairsIn`), there
+    * is no bundle to release, so the pair frame is unpersisted before
+    * the rethrow, unless the caller had persisted it already. */
   def bundle(docs: DataFrame, idCol: String,
              pairsIn: DataFrame): DedupBundle = {
+    val callerPersisted = pairsIn.storageLevel != StorageLevel.NONE
     val pairs = pairsIn.persist(StorageLevel.MEMORY_AND_DISK)
-    val cl = Components.clusters(docs, idCol, pairs)
+    val cl = try Components.clusters(docs, idCol, pairs)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    catch { case e: Throwable =>
+      if (!callerPersisted) pairs.unpersist(false)
+      throw e
+    }
     val canonical = docs.join(
       cl.filter(col("cluster_id") === col(idCol)).select(col(idCol)),
       Seq(idCol), "left_semi")

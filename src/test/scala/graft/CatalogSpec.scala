@@ -152,6 +152,30 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("appendPartitioned runs no job beyond its layout check and its write") {
+    import spark.implicits._
+    val (cat, _) = freshCatalog()
+    def slice(lo: Int) = (lo until lo + 6).map(i => (i, s"v$i", s"p${i % 3}"))
+      .toDF("id", "v", "part").coalesce(1)
+    cat.putPartitioned("parted", slice(0), "part")
+    val (_, appendJobs) = JobCount(spark)(
+      cat.appendPartitioned("parted", slice(6), "part"))
+    // the same two steps by hand: read the stored schema, then a
+    // dynamic-partition append of the same slice
+    val control = Files.createTempDirectory("graft-append-control")
+      .resolve("t").toString
+    slice(0).write.partitionBy("part").parquet(control)
+    val (_, controlJobs) = JobCount(spark) {
+      spark.read.parquet(control).schema
+      slice(6).write.partitionBy("part")
+        .mode(org.apache.spark.sql.SaveMode.Append).parquet(control)
+    }
+    assert(controlJobs >= 1)
+    assert(appendJobs <= controlJobs,
+      s"appendPartitioned ran $appendJobs jobs; schema read + write run $controlJobs")
+    assert(cat.get("parted").count() === 12L)
+  }
+
   test("appendPartitioned enforces the stored layout: column set, types, partition column") {
     import spark.implicits._
     val (cat, _) = freshCatalog()
@@ -311,7 +335,7 @@ class CatalogSpec extends AnyFunSuite {
     assert(got.options.get(Catalog.PartitionColKey) === Some("part"))
   }
 
-  test("partition stats: manifest bookkeeping mirrors the FS walk after put/append/compact") {
+  test("fileStats equals an independent FS walk after put, appends, compact and reopen") {
     import spark.implicits._
     val (cat, root) = freshCatalog()
     // independent FS truth: first-level partition dirs → (files, bytes)
@@ -335,43 +359,33 @@ class CatalogSpec extends AnyFunSuite {
         }.toMap
       finally st.close()
     }
-    def check(clue: String): Unit = {
-      val e = cat.filetable("parted")
-      val truth = walk(e.path)
-      assert(cat.partitionStats("parted") === Some(truth),
-        s"$clue: manifest stats must equal the FS walk")
-      val fs = cat.fileStats("parted")
+    def check(c: Catalog, clue: String): Unit = {
+      val truth = walk(c.filetable("parted").path)
+      val fs = c.fileStats("parted")
       assert(fs.files === truth.valuesIterator.map(_._1).sum &&
         fs.bytes === truth.valuesIterator.map(_._2).sum &&
         fs.partitions === truth.size, s"$clue: fileStats must match the walk")
     }
     cat.putPartitioned("parted",
       Seq((1, "a"), (2, "b"), (3, null)).toDF("id", "part").coalesce(1), "part")
-    check("after put")
+    check(cat, "after put")
     cat.appendPartitioned("parted",
       Seq((4, "a"), (5, "c"), (6, null)).toDF("id", "part").coalesce(1), "part")
-    check("after first append")
+    check(cat, "after first append")
     cat.appendPartitioned("parted",
       Seq((7, "a")).toDF("id", "part").coalesce(1), "part")
-    check("after second append")
+    check(cat, "after second append")
     cat.compactPartitioned("parted", targetFileBytes = 64L << 20)
-    check("after compact")
-    // a REOPENED catalog serves the same stats from the manifest —
-    // no walk, no prior in-memory state
+    check(cat, "after compact")
+    // a REOPENED catalog, with no prior in-memory state, walks the
+    // same version
     cat.close()
     val reopened = new Catalog(spark, root)
-    assert(reopened.partitionStats("parted") ===
-      Some(walk(reopened.filetable("parted").path)),
-      "reopened catalog must serve partition stats from the manifest")
-    // flat entries have no bookkeeping and fall back to the walk
-    cat2Flat(reopened)
-  }
-
-  private def cat2Flat(cat: Catalog): Unit = {
-    import spark.implicits._
-    cat.put("flat_stats", Seq(1, 2, 3).toDF("x"))
-    assert(cat.partitionStats("flat_stats").isEmpty)
-    assert(cat.fileStats("flat_stats").files > 0)
+    check(reopened, "on a reopened catalog")
+    // flat entries: every data file, no partition dirs
+    reopened.put("flat_stats", Seq(1, 2, 3).toDF("x"))
+    val flat = reopened.fileStats("flat_stats")
+    assert(flat.files > 0 && flat.partitions === 0)
   }
 
   test("compactPartitioned rewrite scan is partition-pruned to the fragmented values") {
@@ -805,26 +819,45 @@ class CatalogSpec extends AnyFunSuite {
 
   test("manifests from before the schema column open and read by inference") {
     import spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
     val dir = Files.createTempDirectory("graft-catalog-legacy")
     val data = dir.resolve("old-v1").toString
     Seq((1, "a"), (2, "b")).toDF("id", "v").write.parquet(data)
-    // a seven-column row (options and partition stats empty) and a
-    // four-column row, as earlier layouts wrote them
+    // seven-column rows (options and partition stats, the seventh
+    // column then, empty or set) and a four-column row, as layouts
+    // before the schema column wrote them
+    val stats = "part%3Da=1:123"
+    // and an eight-column row (partition stats, then the schema), the
+    // layout between the schema column and the stats column's removal
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("v", StringType)))
+    val encoded = java.net.URLEncoder.encode(schema.json, "UTF-8")
     Files.write(dir.resolve("_catalog.tsv"), java.util.List.of(
       s"old\tparquet\t$data\tnode01,node02\t\t\t",
-      s"older\tparquet\t$data\tnode03"))
+      s"old_stats\tparquet\t$data\tnode04\t\t\t$stats",
+      s"older\tparquet\t$data\tnode03",
+      s"with_stats_col\tparquet\t$data\tnode05\t\t\t\t$encoded"))
     val cat = new Catalog(spark, dir.toString)
-    Seq("old", "older").foreach { n =>
+    Seq("old", "old_stats", "older").foreach { n =>
       assert(cat.filetable(n).schema.isEmpty, n)
       assert(cat.get(n).orderBy("id").as[(Int, String)].collect().toSeq ===
         Seq((1, "a"), (2, "b")), n)
     }
-    // the next write rewrites the manifest with eight columns; the
-    // legacy entries keep inferring and a fresh one records
+    assert(cat.filetable("with_stats_col").schema === Some(schema))
+    val (recorded, jobs) = JobCount(spark)(cat.get("with_stats_col"))
+    assert(jobs === 0, "an eight-column row's schema must spare the inference job")
+    assert(recorded.orderBy("id").as[(Int, String)].collect().toSeq ===
+      Seq((1, "a"), (2, "b")))
+    // the next write rewrites the manifest in the current layout; the
+    // legacy entries keep inferring, the recorded schema survives, and
+    // a fresh one records
     cat.put("new", Seq(1).toDF("x"))
     val reopened = new Catalog(spark, dir.toString)
-    assert(reopened.filetable("old").schema.isEmpty)
-    assert(reopened.get("old").count() === 2L)
+    Seq("old", "old_stats").foreach { n =>
+      assert(reopened.filetable(n).schema.isEmpty, n)
+      assert(reopened.get(n).count() === 2L, n)
+    }
+    assert(reopened.filetable("with_stats_col").schema === Some(schema))
     assert(reopened.filetable("new").schema.nonEmpty)
   }
 }

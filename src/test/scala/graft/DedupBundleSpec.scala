@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import graft.operators.{Components, Dedup}
+import graft.operators.{Caches, Components, Dedup}
 
 /** [[Dedup.bundle]]: every derived frame equals its independently
   * computed counterpart, the internal caches release cleanly, and the
@@ -72,6 +72,34 @@ class DedupBundleSpec extends AnyFunSuite {
       !bundle.pairs.storageLevel.useDisk)
     assert(!bundle.clusters.storageLevel.useMemory &&
       !bundle.clusters.storageLevel.useDisk)
+  }
+
+  test("a pair frame that fails to evaluate leaves no cached relation behind") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    import org.apache.spark.storage.StorageLevel
+    // a range, not a local relation, so the third row raises in a task
+    // rather than while the optimizer folds the input
+    def failing() = spark.range(1, 4).select(col("id").as("doc_a"),
+      when(col("id") === 3L, raise_error(lit("failing pair")))
+        .otherwise(col("id") + 1).as("doc_b"))
+    def failsOnPairs(pairs: DataFrame): Unit = {
+      val ex = intercept[Exception](Dedup.bundle(docs, "doc_id", pairs))
+      assert(ex.toString.contains("failing pair") ||
+        Option(ex.getCause).exists(_.toString.contains("failing pair")),
+        s"bundle failed for another reason: $ex")
+    }
+    // earlier tests' releases land on the listener bus; let them
+    val before = Caches.residentAfter(spark, 2000)
+    failsOnPairs(failing())
+    assert(Caches.residentAfter(spark, 3000) === before,
+      "bundle's own persist of the pair frame must not outlive the throw")
+    // a pair frame the caller persisted stays the caller's to release
+    val callers = failing().persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      failsOnPairs(callers)
+      assert(callers.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    } finally callers.unpersist(true)
+    assert(Caches.residentAfter(spark, 3000) === before)
   }
 
   private def timed(f: => Unit): Double = {
