@@ -44,9 +44,9 @@ final class Engine(val spark: SparkSession, catalogRoot: String) {
 
   /** Raw text lines of a catalog dataset (the reference's unit of
     * maple input; CSV files line-granular, fileserver.py:265-289).
-    * Typed rows serialize NULL cells as empty fields (concat_ws alone
-    * would silently DROP them, shifting every later positional field
-    * the maple UDF indexes). */
+    * Typed rows are [[SelectParser.rowAsLine]]: NULL cells serialize
+    * as empty fields (concat_ws alone would silently DROP them,
+    * shifting every later positional field the maple UDF indexes). */
   def lines(name: String): Dataset[String] = {
     val e = catalog.filetable.getOrElse(name,
       throw new NoSuchElementException(s"no such dataset: $name"))
@@ -55,8 +55,7 @@ final class Engine(val spark: SparkSession, catalogRoot: String) {
       spark.read.text(e.path).select(col("value")).as[String]
     else {
       val df = get(name)
-      val cells = df.columns.map(c => coalesce(col(c).cast("string"), lit("")))
-      df.select(concat_ws(",", cells.toIndexedSeq: _*)).as[String]
+      df.select(SelectParser.rowAsLine(df)).as[String]
     }
   }
 

@@ -440,10 +440,9 @@ final class Catalog(spark: SparkSession, root: String,
     val compacted = Catalog.rewriteFrame(df, partitionCol,
       frag.map(p => (p.value, p.target)))
     // the row-count guard's LHS: the current version's total rows,
-    // counted before the rewrite (parquet metadata count — no data
-    // pages read). Only needed when something is actually rewritten:
-    // an all-links compact moves bytes verbatim.
-    val oldCount = if (frag.nonEmpty) df.count() else 0L
+    // counted in one job before the rewrite. Only needed when something
+    // is actually rewritten: an all-links compact moves bytes verbatim.
+    val oldCount = if (frag.nonEmpty) Catalog.rowCount(df) else 0L
     writeVersioned(name, e.format, e.options) { dir =>
       if (frag.nonEmpty)
         Catalog.writer(compacted).format(e.format).options(e.options)
@@ -469,10 +468,11 @@ final class Catalog(spark: SparkSession, root: String,
       // inference rendering a read-back value differently from its
       // directory name, so the isin matched nothing — fail the
       // compact (writeVersioned reclaims this dir) instead of
-      // silently dropping data from a maintenance op
+      // silently dropping data from a maintenance op. The fresh version
+      // is read with the displaced one's schema: no inference job.
       if (frag.nonEmpty) {
-        val newCount = spark.read.format(e.format).options(e.options)
-          .load(dir).count()
+        val newCount = Catalog.rowCount(spark.read.format(e.format)
+          .options(e.options).schema(df.schema).load(dir))
         if (newCount != oldCount)
           throw new IllegalStateException(
             s"compactPartitioned($name): rewrite would change the row " +

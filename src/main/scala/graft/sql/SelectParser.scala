@@ -46,8 +46,8 @@ object SelectParser {
     * equivalent raw view is the comma-joined columns. NULL cells must
     * serialize as EMPTY fields — bare concat_ws skips NULL arguments
     * entirely, which would shift comma adjacency and let a comma-form
-    * regex false-match across the dropped cell (same rule as
-    * [[graft.Engine.lines]]). */
+    * regex false-match across the dropped cell. [[graft.Engine.lines]]
+    * serializes typed rows with this column too. */
   def rowAsLine(df: DataFrame): Column =
     concat_ws(",",
       df.columns.map(c => coalesce(col(c).cast("string"), lit(""))).toIndexedSeq: _*)

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming over the `events` table shape: tumbling-window
   * aggregation with a watermark for late data, plus the identical
@@ -9,7 +10,7 @@ import org.apache.spark.sql.functions._
   * results can be compared row-for-row.
   *
   * Streams are beyond-reference (SURVEY.md §2.9: the reference is
-  * batch-files-only); this is the readStream → watermark → window →
+  * batch-files-only); this is the streaming source → watermark → window →
   * writeStream shape a user upgrading from the reference gets.
   */
 /** Event row for stateful sessionization with the watermarked `ts`
@@ -114,45 +115,99 @@ case class GapHit(user_id: Long, gap_s: Long, bucket: Int)
 
 object EventStream {
 
-  /** Shared aggregation: hourly tumbling window per event_type. */
-  private def windowed(df: DataFrame): DataFrame =
-    df.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+  /** The streaming parquet source over `dir`, every stream's one way in.
+    * Its schema comes from [[graft.Tables.inferredSchema]], the
+    * engine's file-version schema memo, so rebuilding a stream over an
+    * unchanged directory runs no footer-inference job. A directory that
+    * lists no file falls back to plain inference, which reports Spark's
+    * error. Readers of a possibly NANOS-typed events file set
+    * `spark.sql.legacy.parquet.nanosAsLong` first: the memo keys on it. */
+  private def source(spark: SparkSession, dir: String): DataFrame = {
+    val schema = graft.Tables.inferredSchema(spark, "parquet", dir)
+      .getOrElse(spark.read.parquet(dir).schema)
+    spark.readStream.schema(schema).parquet(dir)
+  }
+
+  /** `cols` over `df` (named) and `ts`, beside `window_start`: the
+    * start seconds of the tumbling `windowSec` window from native
+    * `window()` when `slideSec` is unset or equals `windowSec`, else
+    * one row per containing sliding window ([[slidingStartsCol]]).
+    * `cols` are evaluated once per input row: beside the window when
+    * tumbling, before the explode when sliding. */
+  private def withWindowStart(df: DataFrame, windowSec: Long, slideSec: Long,
+                              cols: Column*): DataFrame =
+    if (slideSec <= 0L || slideSec == windowSec)
+      df.select(window(col("ts"), s"$windowSec seconds").getField("start")
+        .cast("long").as("window_start") +: cols :+ col("ts"): _*)
+    else {
+      val rows = df.select(cols :+ col("ts"): _*)
+      rows.select(slidingStartsCol(windowSec, slideSec).as("window_start") +:
+        rows.columns.toSeq.map(col): _*)
+    }
+
+  /** Batch-side HALF_UP round-6, matching the batch operators'
+    * `round(col, 6)` exactly (Spark's Round is BigDecimal HALF_UP). */
+  private def r6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Fire `state`'s event-time timeout at `ms`, kept ahead of the
+    * current watermark: Spark rejects a timeout timestamp at or behind
+    * it, and `ms` can lag it when a batch's events all sit near the
+    * lateness bound. */
+  private def timeoutAt(state: GroupState[_], ms: Long): Unit =
+    state.setTimeoutTimestamp(math.max(ms, state.getCurrentWatermarkMs() + 1L))
+
+  /** The per-doc fold of the doc-scoring streams: each doc's token
+    * count and fixed-point contribution sum within the micro-batch its
+    * rows arrive in, read out by `score(doc_id, n_tokens, sum)`. The
+    * GroupState is never written ([[lmScoreStream]] documents this
+    * zero-retained-state contract). */
+  private def scoreDocs[O: Encoder](toks: Dataset[LmTok])(
+      score: (Long, Long, Long) => O): DataFrame = {
+    val spark = toks.sparkSession
+    import spark.implicits._
+    toks.groupByKey(_.doc_id)
+      .flatMapGroupsWithState[LmDocState, O](
+        OutputMode.Update, GroupStateTimeout.NoTimeout) {
+        (docId: Long, it: Iterator[LmTok], _: GroupState[LmDocState]) =>
+          var n = 0L
+          var s = 0L
+          it.foreach { t => n += 1L; s += t.lp }
+          if (n == 0L) Iterator.empty else Iterator(score(docId, n, s))
+      }.toDF()
+  }
+
+  /** Hourly tumbling window per event_type, the aggregation
+    * [[hourlyStream]] shares (driver-checkable against DuckDB
+    * time_bucket). */
+  def hourlyBatch(events: DataFrame): DataFrame =
+    events.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
       .select(col("w.start").cast("long").as("hour_start"),
               col("event_type"), col("cnt"), col("sum_value"))
 
-  /** Batch formulation (driver-checkable against DuckDB time_bucket). */
-  def hourlyBatch(events: DataFrame): DataFrame = windowed(events)
-
   /** Streaming formulation over a parquet directory; 10-minute
     * watermark bounds state for late arrivals. */
-  def hourlyStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    windowed(stream.withWatermark("ts", "10 minutes"))
-  }
+  def hourlyStream(spark: SparkSession, dir: String): DataFrame =
+    hourlyBatch(source(spark, dir).withWatermark("ts", "10 minutes"))
 
-  /** Shared SLIDING-window aggregation: count + sum per event_type
-    * per OVERLAPPING window — "the last `dur` every `slide`", the most
-    * common production windowing ask the tumbling form can't express.
-    * Spark's native `window(ts, dur, slide)` generates every window
-    * containing the row (epoch-aligned starts at multiples of
-    * `slide`), so each event contributes to ⌈dur/slide⌉ windows —
-    * that factor is the extra shuffle volume AND, on the streaming
-    * side, the extra per-window state; size `slide` accordingly
-    * (hour/15 min = 4× is the conventional trade). */
-  private def slidingWindowed(df: DataFrame, dur: String,
-                              slide: String): DataFrame =
-    df.groupBy(window(col("ts"), dur, slide).as("w"), col("event_type"))
+  /** SLIDING-window aggregation, shared with [[slidingStream]]: count
+    * + sum per event_type per OVERLAPPING window — "the last `dur`
+    * every `slide`", the most common production windowing ask the
+    * tumbling form can't express. Spark's native `window(ts, dur,
+    * slide)` generates every window containing the row (epoch-aligned
+    * starts at multiples of `slide`), so each event contributes to
+    * ⌈dur/slide⌉ windows — that factor is the extra shuffle volume
+    * AND, on the streaming side, the extra per-window state; size
+    * `slide` accordingly (hour/15 min = 4× is the conventional trade).
+    * Gate-checkable: the DuckDB oracle replays the epoch-aligned
+    * membership arithmetic. */
+  def slidingBatch(events: DataFrame, dur: String = "1 hour",
+                   slide: String = "15 minutes"): DataFrame =
+    events.groupBy(window(col("ts"), dur, slide).as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
       .select(col("w.start").cast("long").as("window_start"),
               col("event_type"), col("cnt"), col("sum_value"))
-
-  /** Batch formulation of the sliding aggregate (gate-checkable: the
-    * DuckDB oracle replays the epoch-aligned membership arithmetic). */
-  def slidingBatch(events: DataFrame, dur: String = "1 hour",
-                   slide: String = "15 minutes"): DataFrame =
-    slidingWindowed(events, dur, slide)
 
   /** Streaming formulation — the identical expressions under a
     * watermark; in append mode a window emits once, when the
@@ -161,11 +216,8 @@ object EventStream {
     * stream == batch on a finite feed. */
   def slidingStream(spark: SparkSession, dir: String,
                     dur: String = "1 hour", slide: String = "15 minutes",
-                    delay: String = "10 minutes"): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    slidingWindowed(stream.withWatermark("ts", delay), dur, slide)
-  }
+                    delay: String = "10 minutes"): DataFrame =
+    slidingBatch(source(spark, dir).withWatermark("ts", delay), dur, slide)
 
   /** Epoch-aligned overlapping-window membership as an exploded
     * column of window START seconds: for an event at time t the
@@ -209,11 +261,8 @@ object EventStream {
                        gapMs: Long = graft.operators.Sessionize.DefaultGapMs,
                        delay: String = "10 minutes"): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
     import graft.operators.{Session, Sessionize}
-    val schema = spark.read.parquet(dir).schema
-    val events = spark.readStream.schema(schema).parquet(dir)
-      .withWatermark("ts", delay)
+    val events = source(spark, dir).withWatermark("ts", delay)
       .select(col("user_id"), unix_millis(col("ts")).as("ts_ms"), col("ts"))
       .as[WatermarkedEvent]
     events.groupByKey(_.user_id)
@@ -247,11 +296,8 @@ object EventStream {
               }
               state.update(merged.last)
               // the open session dies when the watermark clears its
-              // close point (must stay ahead of the current watermark
-              // or Spark rejects the timestamp — can lag it when this
-              // batch's events were all near the lateness bound)
-              state.setTimeoutTimestamp(math.max(merged.last.end_ms + gapMs,
-                state.getCurrentWatermarkMs() + 1))
+              // close point
+              timeoutAt(state, merged.last.end_ms + gapMs)
               merged.init.iterator
             }
           }
@@ -266,18 +312,9 @@ object EventStream {
   def kmvWindowedBatch(events: DataFrame, valueExpr: String,
                        windowSec: Long = 3600L, k: Int = 16,
                        slideSec: Long = 0L): DataFrame = {
-    val grouped =
-      if (slideSec <= 0L || slideSec == windowSec)
-        events.select(window(col("ts"), s"$windowSec seconds").as("w"),
-            expr(valueExpr).as("v"))
-          .select(col("w.start").cast("long").as("window_start"), col("v"))
-      else
-        // sliding: each value lands in its dur/slide containing
-        // windows ([[slidingStartsCol]] — identical membership to the
-        // native sliding window())
-        events.select(expr(valueExpr).as("v"), col("ts"))
-          .select(slidingStartsCol(windowSec, slideSec).as("window_start"),
-            col("v"))
+    // sliding: each value lands in its dur/slide containing windows
+    val grouped = withWindowStart(events, windowSec, slideSec,
+      expr(valueExpr).as("v"))
     graft.operators.Sketch.kmvDistinctGrouped(grouped, "window_start", "v", k)
   }
 
@@ -314,27 +351,16 @@ object EventStream {
                         slideSec: Long = 0L): DataFrame = {
     require(k >= 3, s"kmvWindowedStream needs k >= 3, got $k")
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = spark.read.parquet(dir).schema
-    val hashed = spark.readStream.schema(schema).parquet(dir)
-      .withWatermark("ts", delay)
-      .select(expr(graft.operators.Sketch.md5Hash60Sql(valueExpr)).as("hv"),
-        col("ts"))
-      .filter(col("hv").isNotNull)
     // sliding (slideSec < windowSec): each hash feeds the state of
     // ALL dur/slide containing windows — state cost scales by exactly
     // that factor (the [[slidingBatch]] trade), emit-on-close
     // unchanged because state is keyed by window START and the
     // timeout below fires at start + dur either way
-    val ev = (if (slideSec <= 0L || slideSec == windowSec)
-        hashed.select(window(col("ts"), s"$windowSec seconds").as("w"),
-            col("hv"), col("ts"))
-          .select(col("w.start").cast("long").as("window_start"), col("hv"),
-            col("ts"))
-      else
-        hashed.select(slidingStartsCol(windowSec, slideSec)
-            .as("window_start"), col("hv"), col("ts"))
-      ).as[KmvEvent]
+    val hashed = source(spark, dir).withWatermark("ts", delay)
+      .select(expr(graft.operators.Sketch.md5Hash60Sql(valueExpr)).as("hv"),
+        col("ts"))
+      .filter(col("hv").isNotNull)
+    val ev = withWindowStart(hashed, windowSec, slideSec, col("hv")).as[KmvEvent]
     ev.groupByKey(_.window_start)
       .flatMapGroupsWithState[KmvState, KmvWindow](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -348,10 +374,8 @@ object EventStream {
             val merged = (state.getOption.map(_.hashes).getOrElse(Nil)
               ++ it.map(_.hv)).distinct.sorted.take(k)
             state.update(KmvState(merged))
-            // fire when the watermark clears the window end (must stay
-            // ahead of the current watermark, sessionizeStream note)
-            state.setTimeoutTimestamp(math.max((ws + windowSec) * 1000L,
-              state.getCurrentWatermarkMs() + 1))
+            // fire when the watermark clears the window end
+            timeoutAt(state, (ws + windowSec) * 1000L)
             Iterator.empty
           }
       }.toDF()
@@ -388,15 +412,9 @@ object EventStream {
     * support is judged against each window's own total). */
   private def windowedValues(events: DataFrame, valueExpr: String,
                              windowSec: Long, slideSec: Long): DataFrame =
-    (if (slideSec <= 0L || slideSec == windowSec)
-        events.select(window(col("ts"), s"$windowSec seconds").as("w"),
-            expr(valueExpr).cast("string").as("v"))
-          .select(col("w.start").cast("long").as("window_start"), col("v"))
-      else
-        events.select(expr(valueExpr).cast("string").as("v"), col("ts"))
-          .select(slidingStartsCol(windowSec, slideSec).as("window_start"),
-            col("v"))
-      ).filter(col("v").isNotNull)
+    withWindowStart(events, windowSec, slideSec,
+        expr(valueExpr).cast("string").as("v"))
+      .filter(col("v").isNotNull)
 
   /** The offline EXACTIFIER pass [[heavyHittersWindowedStream]]'s doc
     * promises — pass 2 of the standard two-pass frequent-items
@@ -465,25 +483,14 @@ object EventStream {
       s"counters=$c cannot guarantee support=$support " +
         s"(need counters + 1 >= ${1.0 / support})")
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = spark.read.parquet(dir).schema
-    val valued = spark.readStream.schema(schema).parquet(dir)
-      .withWatermark("ts", delay)
-      .select(expr(valueExpr).cast("string").as("v"), col("ts"))
-      .filter(col("v").isNotNull)
     // sliding (slideSec < windowSec): a value feeds the MG summary of
     // ALL dur/slide containing windows — per-window state is still
     // ≤ c counters, so total state scales by exactly that factor (the
     // [[kmvWindowedStream]] sliding trade); emit-on-close unchanged
-    val ev = (if (slideSec <= 0L || slideSec == windowSec)
-        valued.select(window(col("ts"), s"$windowSec seconds").as("w"),
-            col("v"), col("ts"))
-          .select(col("w.start").cast("long").as("window_start"), col("v"),
-            col("ts"))
-      else
-        valued.select(slidingStartsCol(windowSec, slideSec)
-            .as("window_start"), col("v"), col("ts"))
-      ).as[HhEvent]
+    val valued = source(spark, dir).withWatermark("ts", delay)
+      .select(expr(valueExpr).cast("string").as("v"), col("ts"))
+      .filter(col("v").isNotNull)
+    val ev = withWindowStart(valued, windowSec, slideSec, col("v")).as[HhEvent]
     ev.groupByKey(_.window_start)
       .flatMapGroupsWithState[HhState, HhHit](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -518,10 +525,8 @@ object EventStream {
                 }.toMap
               }
             state.update(HhState(st.n + arrived, merged))
-            // fire when the watermark clears the window end (must stay
-            // ahead of the current watermark, sessionizeStream note)
-            state.setTimeoutTimestamp(math.max((ws + windowSec) * 1000L,
-              state.getCurrentWatermarkMs() + 1))
+            // fire when the watermark clears the window end
+            timeoutAt(state, (ws + windowSec) * 1000L)
             Iterator.empty
           }
       }.toDF()
@@ -576,16 +581,13 @@ object EventStream {
                     horizonMs: Long = 24L * 3600 * 1000,
                     maxBucket: Int = 64): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming=$maxHamming: 4-chunk banding only guarantees candidates for hamming <= 3")
     require(maxBucket > 0, s"maxBucket=$maxBucket must be positive")
     graft.functions.SimHash64.register(spark)
     val droppedArrivals =
       spark.sparkContext.longAccumulator("graft.nearDupStream.droppedArrivals")
-    val schema = spark.read.parquet(dir).schema
-    val banded = spark.readStream.schema(schema).parquet(dir)
-      .withWatermark(tsCol, delay)
+    val banded = source(spark, dir).withWatermark(tsCol, delay)
       .select(col(idCol).as("doc_id"),
         graft.operators.Dedup.simhash(textCol).as("fp"),
         unix_millis(col(tsCol)).as("ts_ms"), col(tsCol).as("ts"))
@@ -609,8 +611,7 @@ object EventStream {
             if (retained.isEmpty) state.remove()
             else {
               state.update(BandState(retained))
-              state.setTimeoutTimestamp(
-                math.max(retained.map(_.ts_ms).max + horizonMs, wm + 1))
+              timeoutAt(state, retained.map(_.ts_ms).max + horizonMs)
             }
             Iterator.empty
           } else {
@@ -637,8 +638,7 @@ object EventStream {
             }
             val kept = seen.filter(_.ts_ms >= wm - horizonMs)
             state.update(BandState(kept))
-            state.setTimeoutTimestamp(math.max(
-              kept.map(_.ts_ms).foldLeft(wm)(math.max) + horizonMs, wm + 1))
+            timeoutAt(state, kept.map(_.ts_ms).foldLeft(wm)(math.max) + horizonMs)
             hits.result().iterator
           }
       }.toDF()
@@ -694,7 +694,6 @@ object EventStream {
     asOfDroppedAcc = Some(droppedHistory)
     // may be NANOS-typed depending on driver generation — see Tables.events
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(dir).schema
     val static = graft.Tables.normalizeEventsTs(spark.read.parquet(dir))
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
@@ -713,8 +712,7 @@ object EventStream {
         case null => 0L; case n: Long => n
       })
     val lookup = static.drop("cut")
-    graft.Tables.normalizeEventsTs(
-        spark.readStream.schema(rawSchema).parquet(dir))
+    graft.Tables.normalizeEventsTs(source(spark, dir))
       .filter(col("event_type") === "click")
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
       .join(lookup, Seq("user_id"), "left")
@@ -757,13 +755,11 @@ object EventStream {
   def anomalyStream(spark: SparkSession, dir: String,
                     k: Double = 3.5): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(dir).schema
     val profile = graft.operators.EventAnalytics.robustProfile(
         graft.Tables.normalizeEventsTs(spark.read.parquet(dir)),
         "event_type", "value", "event_id")
       .persist() // snapshot once; stream-static joins re-run the static plan per micro-batch
-    graft.Tables.normalizeEventsTs(
-        spark.readStream.schema(rawSchema).parquet(dir))
+    graft.Tables.normalizeEventsTs(source(spark, dir))
       .select(col("event_id"), col("event_type"),
         col("value").cast("double").as("value"))
       .filter(col("value").isNotNull)
@@ -773,20 +769,17 @@ object EventStream {
         col("mscore"), col("is_anomaly"))
   }
 
-  /** Shared windowed per-user RATE aggregation — the value column the
-    * bot detector scores: events per user per tumbling window. Used
-    * verbatim by the batch fit and the stream so the two cannot
-    * drift (the [[hourlyBatch]]/[[hourlyStream]] convention). */
-  private def rated(df: DataFrame, windowDur: String): DataFrame =
-    df.groupBy(col("user_id"), window(col("ts"), windowDur).as("w"))
+  /** Windowed per-user RATE aggregation — the value column the bot
+    * detector scores: events per user per tumbling window. Used
+    * verbatim by [[rateAnomalyStream]]'s batch fit and its stream so
+    * the two cannot drift (the [[hourlyBatch]]/[[hourlyStream]]
+    * convention). */
+  def windowRatesBatch(events: DataFrame,
+                       windowDur: String = "1 hour"): DataFrame =
+    events.groupBy(col("user_id"), window(col("ts"), windowDur).as("w"))
       .agg(count(lit(1)).cast("double").as("value"))
       .select(col("user_id"), col("w.start").cast("long").as("window_start"),
         col("value"))
-
-  /** Batch formulation of the windowed rates (spec + fit input). */
-  def windowRatesBatch(events: DataFrame,
-                       windowDur: String = "1 hour"): DataFrame =
-    rated(events, windowDur)
 
   /** Streaming RATE anomaly — the volume complement to
     * [[anomalyStream]]'s value scoring, closing the bot-detection
@@ -818,8 +811,7 @@ object EventStream {
                         k: Double = 3.5,
                         exact: Boolean = true): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(dir).schema
-    val batchRates = rated(graft.Tables.normalizeEventsTs(
+    val batchRates = windowRatesBatch(graft.Tables.normalizeEventsTs(
         spark.read.parquet(dir)), windowDur)
       .withColumn("grp", lit("all"))
       .withColumn("rate_id",
@@ -831,10 +823,9 @@ object EventStream {
     val (med, mad) =
       if (prof.isEmpty) (0.0, 0.0)
       else (prof(0).getAs[Double]("med"), prof(0).getAs[Double]("mad"))
-    graft.Tables.normalizeEventsTs(
-        spark.readStream.schema(rawSchema).parquet(dir))
+    graft.Tables.normalizeEventsTs(source(spark, dir))
       .withWatermark("ts", delay)
-      .transform(df => rated(df, windowDur))
+      .transform(df => windowRatesBatch(df, windowDur))
       .withColumn("med", lit(med))
       .withColumn("mad", lit(mad))
       .transform(graft.operators.EventAnalytics.scoreAgainstProfile(k))
@@ -842,13 +833,6 @@ object EventStream {
         col("value").as("n_events"), col("mscore"), col("is_anomaly"))
   }
 
-  /** Streaming exact-duplicate removal on (keyCols, ts): identical
-    * re-deliveries of the same event are dropped, while genuine new
-    * events for the same key (different ts) pass through. The
-    * watermark bounds the dedup state (the standard unbounded-stream
-    * trade: exact within the watermark horizon). For per-key
-    * first-occurrence-only semantics use
-    * `dropDuplicatesWithinWatermark(keyCols)` instead. */
   /** Streaming inter-arrival gap extraction — the stateful twin of
     * [[graft.operators.EventAnalytics.gaps]]: per-user state is ONE
     * long (the last event time), each arriving event emits its gap to
@@ -867,10 +851,7 @@ object EventStream {
   def gapStream(spark: SparkSession, dir: String, horizonS: Long = 86400L,
                 delay: String = "10 minutes"): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = spark.read.parquet(dir).schema
-    val events = spark.readStream.schema(schema).parquet(dir)
-      .withWatermark("ts", delay)
+    val events = source(spark, dir).withWatermark("ts", delay)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("ts"))
       .as[GapEvent]
     events.groupByKey(_.user_id)
@@ -892,12 +873,8 @@ object EventStream {
                     else 64 - java.lang.Long.numberOfLeadingZeros(gapS))
               }.filter(_.gap_s <= horizonS).toVector
               state.update(GapState(sorted.last))
-              // alive until no in-horizon successor is possible (and
-              // always ahead of the current watermark, which Spark
-              // requires of timeout timestamps)
-              state.setTimeoutTimestamp(math.max(
-                sorted.last / 1000L + (horizonS + 1L) * 1000L,
-                state.getCurrentWatermarkMs() + 1L))
+              // alive until no in-horizon successor is possible
+              timeoutAt(state, sorted.last / 1000L + (horizonS + 1L) * 1000L)
               hits.iterator
             }
           }
@@ -939,22 +916,15 @@ object EventStream {
                   ratioThreshold: Double = 2.0): DataFrame = {
     require(ratioThreshold > 0, "driftStream needs ratioThreshold > 0")
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.operators.Similarity
-    // batch-side HALF_UP round-6, matching the batch operator's
-    // round(col, 6) exactly (Spark's Round is BigDecimal HALF_UP)
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val baseStats: Map[Int, (Long, Long)] = Similarity.scoredDistances(
         base.withColumn("__did", lit(0L)), "__did", vecCol, centroids,
         "driftStream")
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n"), sum(col("d2f")).as("s"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val schema = spark.read.parquet(dir).schema
     val scored = Similarity.scoredDistances(
-        spark.readStream.schema(schema).parquet(dir)
-          .withColumn("__did", lit(0L)),
+        source(spark, dir).withColumn("__did", lit(0L)),
         "__did", vecCol, centroids, "driftStream")
       .select(col("cluster"), col("d2f")).as[DriftEvent]
     scored.groupByKey(_.cluster)
@@ -1013,18 +983,14 @@ object EventStream {
                     idCol: String = "doc_id", textCol: String = "text",
                     alpha: Double = 0.4): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.operators.TextAnalysis
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     // coalesce: an EMPTY unigram model sums to null, which would NPE
     // here (and a zero total divides by zero inside lmLogProbSql) —
     // fail fast with a model-shaped message instead
     val nRef: Long = uniCounts.agg(coalesce(sum(col("c")), lit(0L)).as("n"))
       .collect()(0).getLong(0)
     require(nRef > 0, s"lmScoreStream: empty unigram model (nRef=$nRef)")
-    val schema = spark.read.parquet(dir).schema
-    val stream = spark.readStream.schema(schema).parquet(dir)
+    val stream = source(spark, dir)
     val toks = stream
       .select(col(idCol).cast("long").as("doc_id"),
         explode(TextAnalysis.lmTransitions(stream, textCol)).as("tr"))
@@ -1040,19 +1006,8 @@ object EventStream {
         round(expr(TextAnalysis.lmLogProbSql(alpha, nRef.toString)))
           .cast("bigint").as("lp"))
       .as[LmTok]
-    toks.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[LmDocState, LmScore](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (docId: Long, it: Iterator[LmTok], _: GroupState[LmDocState]) =>
-          // state is deliberately never written — see the Scaladoc
-          var n = 0L
-          var s = 0L
-          it.foreach { t => n += 1L; s += t.lp }
-          if (n == 0L) Iterator.empty
-          else Iterator(LmScore(docId, n,
-            r6((s.toDouble / 1e9) / n),
-            r6(Math.exp((s.toDouble / -1e9) / n))))
-      }.toDF()
+    scoreDocs(toks)((docId, n, s) => LmScore(docId, n,
+      r6((s.toDouble / 1e9) / n), r6(Math.exp((s.toDouble / -1e9) / n))))
   }
 
   /** Streaming DSIR scoring — the
@@ -1076,27 +1031,12 @@ object EventStream {
                       buckets: Int, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val schema = spark.read.parquet(dir).schema
     val toks = graft.operators.DataSelection.tokenBuckets(
-        spark.readStream.schema(schema).parquet(dir),
-        idCol, textCol, buckets)
+        source(spark, dir), idCol, textCol, buckets)
       .join(broadcast(ratios), Seq("bucket"))
       .select(col("doc_id"), col("lr").as("lp"))
       .as[LmTok]
-    toks.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[LmDocState, DsirScore](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (docId: Long, it: Iterator[LmTok], _: GroupState[LmDocState]) =>
-          // state is deliberately never written — see the Scaladoc
-          var n = 0L
-          var s = 0L
-          it.foreach { t => n += 1L; s += t.lp }
-          if (n == 0L) Iterator.empty
-          else Iterator(DsirScore(docId, n, r6(s.toDouble / 1e9)))
-      }.toDF()
+    scoreDocs(toks)((docId, n, s) => DsirScore(docId, n, r6(s.toDouble / 1e9)))
   }
 
   /** Streaming QUALITY-CLASSIFIER scoring — the
@@ -1118,41 +1058,29 @@ object EventStream {
                      buckets: Int, idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val biasW: Long = weights.filter(col("bucket") === -1L)
       .agg(coalesce(sum(col("w_fixed")), lit(0L))).collect()(0).getLong(0)
-    val schema = spark.read.parquet(dir).schema
     val toks = graft.operators.DataSelection.tokenBuckets(
-        spark.readStream.schema(schema).parquet(dir),
-        idCol, textCol, buckets)
+        source(spark, dir), idCol, textCol, buckets)
       .join(broadcast(weights), Seq("bucket"), "left")
       .select(col("doc_id"),
         coalesce(col("w_fixed"), lit(0L)).as("lp"))
       .as[LmTok]
-    toks.groupByKey(_.doc_id)
-      .flatMapGroupsWithState[LmDocState, ClfScore](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (docId: Long, it: Iterator[LmTok], _: GroupState[LmDocState]) =>
-          // state is deliberately never written — the lmScoreStream
-          // zero-retained-state contract (unbounded doc-id key space)
-          var n = 0L
-          var s = 0L
-          it.foreach { t => n += 1L; s += t.lp }
-          if (n == 0L) Iterator.empty
-          else Iterator(ClfScore(docId, n,
-            r6(1.0 / (1.0 + Math.exp(-((s + biasW).toDouble / 1e9))))))
-      }.toDF()
+    scoreDocs(toks)((docId, n, s) => ClfScore(docId, n,
+      r6(1.0 / (1.0 + Math.exp(-((s + biasW).toDouble / 1e9))))))
   }
 
+  /** Streaming exact-duplicate removal on (keyCols, ts): identical
+    * re-deliveries of the same event are dropped, while genuine new
+    * events for the same key (different ts) pass through. The
+    * watermark bounds the dedup state (the standard unbounded-stream
+    * trade: exact within the watermark horizon). For per-key
+    * first-occurrence-only semantics use
+    * `dropDuplicatesWithinWatermark(keyCols)` instead. */
   def dedupStream(spark: SparkSession, dir: String, keyCols: Seq[String],
-                  tsCol: String, watermark: String = "1 hour"): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    spark.readStream.schema(schema).parquet(dir)
-      .withWatermark(tsCol, watermark)
+                  tsCol: String, watermark: String = "1 hour"): DataFrame =
+    source(spark, dir).withWatermark(tsCol, watermark)
       .dropDuplicates(keyCols :+ tsCol)
-  }
 
   /** Run the streaming query to completion over the (finite) input and
     * return the materialized result — used by tests to assert

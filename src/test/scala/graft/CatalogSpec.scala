@@ -442,6 +442,24 @@ class CatalogSpec extends AnyFunSuite {
       s"failed compact leaked a version dir: $leftovers")
   }
 
+  test("compactPartitioned counts each version in one job and infers no schema") {
+    import spark.implicits._
+    val (cat, _) = freshCatalog()
+    // three writer tasks each touch all three partitions: nine files,
+    // every partition fragmented, so the whole store is rewritten
+    cat.putPartitioned("parted", (0 until 30).map(i => (i, s"v$i", s"p${i % 3}"))
+      .toDF("id", "v", "part").repartition(3), "part")
+    assert(cat.fileStats("parted").files === 9L)
+    val (_, jobs) = JobCount(spark)(
+      cat.compactPartitioned("parted", targetFileBytes = 64L << 20))
+    // each version's row count is one job and the fresh version is read
+    // with the current one's schema: 6 jobs, where count() (two jobs
+    // under adaptive execution) and an inferring read would run 9
+    assert(jobs <= 6, s"compactPartitioned ran $jobs jobs")
+    assert(cat.fileStats("parted").files === 3L)
+    assert(cat.get("parted").count() === 30L)
+  }
+
   test("putCompacted sizes the file count to the data, not the shuffle width") {
     val (cat, _) = freshCatalog()
     // 60000-row lineitem scan arrives pre-split; a naive put would

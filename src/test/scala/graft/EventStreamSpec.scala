@@ -565,4 +565,34 @@ class EventStreamSpec extends AnyFunSuite {
       3L -> ((-1L, -1.0)),
       4L -> ((-1L, -1.0))))
   }
+
+  test("rebuilding a stream over an unchanged directory runs no job") {
+    val dir = Files.createTempDirectory("graft-stream-rebuild").toString
+    Tables.events(spark, SparkSuite.sf0001).write.mode("overwrite").parquet(dir)
+    EventStream.hourlyStream(spark, dir)
+    val (again, jobs) = JobCount(spark)(EventStream.hourlyStream(spark, dir))
+    assert(jobs === 0, "the second build must take the memoized schema")
+    assert(again.isStreaming)
+  }
+
+  test("readStream appears in src/main only in EventStream.source") {
+    // every stream opens its parquet directory through one source; a
+    // second streaming read would show up here
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root))
+    val files = Files.walk(root)
+    val found =
+      try files.iterator.asScala.filter(Files.isRegularFile(_)).toList
+        .map(p => root.relativize(p).toString.replace('\\', '/') ->
+          "readStream".r.findAllIn(Files.readString(p)).size)
+        .filter(_._2 > 0).toMap
+      finally files.close()
+    assert(found === Map("graft/streaming/EventStream.scala" -> 1))
+    val text = Files.readString(root.resolve("graft/streaming/EventStream.scala"))
+    val start = text.indexOf("private def source(")
+    assert(start >= 0)
+    assert(text.indexOf("readStream") > start &&
+      text.indexOf("readStream") < text.indexOf("\n  }\n", start))
+  }
 }
